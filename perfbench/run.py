@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """perfbench: the seeded benchmark of the summaspark engine.
 
-    python3 perfbench/run.py --workload {build,serve,ingest} --seed N \
+    python3 perfbench/run.py --workload {serve,ingest} --seed N \
         --seconds S --trace {0,1}
 
 Run from the repository root. Builds the engine from source (first run
@@ -28,7 +28,7 @@ sys.path.insert(0, str(HERE))
 import build  # noqa: E402
 import workload  # noqa: E402
 
-WORKLOADS = ("build", "serve", "ingest")
+WORKLOADS = ("serve", "ingest")
 HEAP = "2g"
 # A fixed, pre-touched heap keeps peak RSS from varying with GC timing; RSS
 # then moves with off-heap memory (metaspace, code, buffers).

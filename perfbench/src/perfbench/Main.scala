@@ -26,7 +26,6 @@ object Main {
     val run = new Run(spec, args(1))
     val metrics =
       try spec.workload match {
-        case "build"  => run.build()
         case "serve"  => run.serve()
         case "ingest" => run.ingest()
         case other    => sys.error(s"unknown workload $other")
@@ -76,6 +75,12 @@ final class Run(spec: Spec, work: String) {
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .config("spark.driver.host", "localhost")
       .config("spark.driver.bindAddress", "127.0.0.1")
+      // the status store keeps finished jobs and SQL executions for the UI;
+      // a long run would otherwise grow the old generation with them
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.ui.retainedTasks", "1000")
+      .config("spark.sql.ui.retainedExecutions", "20")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -95,7 +100,9 @@ final class Run(spec: Spec, work: String) {
     val t0 = System.nanoTime()
     try {
       val a = request(name, id, traced)(body)
-      Some(((System.nanoTime() - t0) / 1e9, a))
+      val secs = (System.nanoTime() - t0) / 1e9
+      System.err.println(f"perfbench: ${System.currentTimeMillis() / 1e3}%.3f $name $id took $secs%.3f s")
+      Some((secs, a))
     } catch {
       case e: Exception =>
         failed.incrementAndGet()
@@ -108,12 +115,10 @@ final class Run(spec: Spec, work: String) {
   private def check(ok: Boolean, what: => String): Unit =
     if (!ok) { failed.incrementAndGet(); System.err.println(s"perfbench: check failed: $what") }
 
-  private def median(xs: Iterable[Double]): Double = quantile(xs, 0.5)
-
-  /** Nearest-rank quantile; 0 for no samples. */
-  private def quantile(xs: Iterable[Double], p: Double): Double = {
+  /** Nearest-rank median; 0 for no samples. */
+  private def median(xs: Iterable[Double]): Double = {
     val s = xs.toVector.sorted
-    if (s.isEmpty) 0.0 else s(math.max(0, math.ceil(p * s.size).toInt - 1))
+    if (s.isEmpty) 0.0 else s(math.max(0, math.ceil(0.5 * s.size).toInt - 1))
   }
 
   private def deleteDir(dir: String): Unit =
@@ -167,6 +172,17 @@ final class Run(spec: Spec, work: String) {
       System.err.println(f"perfbench: set-up $r took ${times.last}%.2f s")
     }
     (state.get, median(times))
+  }
+
+  /** The spec's warm-up queries, untimed, between set-up and the timed
+    * window, so that the window starts with the query path JIT-compiled. A
+    * fixed count, so every run's window starts at the same point. Their
+    * answers are not checked; an exception ends the run.
+    */
+  private def warmUp(searcher: Searcher): Unit = {
+    val t0 = System.nanoTime()
+    spec.warmup.foreach(runQuery(searcher, _))
+    System.err.println(f"perfbench: warm-up: ${spec.warmup.size} queries in ${elapsed(t0)}%.2f s")
   }
 
   private def hitsOf(rows: Array[Row]): Vector[(Int, Int, Long)] =
@@ -231,37 +247,13 @@ final class Run(spec: Spec, work: String) {
 
   // ------------------------------------------------------------ workloads
 
-  /** Full index builds of one corpus, after a warm-up build in set-up. */
-  def build(): Seq[(String, (Double, String))] = {
-    val n = spec.pagesCount
-    val (pagesDir, setupS) = setUp { dir =>
-      writePages(spec.pagesStart, n, s"$dir/pages")
-      buildIndex(s"$dir/pages", s"$dir/warm", "warm")
-      s"$dir/pages"
-    }
-    var last: String = null
-    var i = 0
-    val t0 = System.nanoTime()
-    while (i < 3 || elapsed(t0) < spec.seconds) {
-      val idx = s"$work/build$i"
-      op("op.build", i, traced(i))(buildIndex(pagesDir, idx, s"b$i")).foreach { case (secs, _) =>
-        samples.add((secs, traced(i)))
-        val nDocs = new IndexReader(spark, idx).fieldStats.get("text").map(_.nDocs)
-        check(nDocs.contains(n.toLong), s"build $i: fieldstats n_docs $nDocs != $n pages")
-        if (last != null) deleteDir(last)
-        last = idx
-      }
-      i += 1
-    }
-    if (last != null) checkDf(pagesDir, last)
-    val docsPerS = n / median(samples.asScala.filterNot(_._2).map(_._1))
-    finish(setupS, docsPerS, pagesDir, last)
-  }
-
-  /** df of the seeded sample terms, recounted from the pages' text with a
-    * plain regex tokenizer, against the index's term statistics.
+  /** The built index against its pages: `n_docs` of the text field equals
+    * the page count, and the df of each seeded sample term equals a count
+    * over the pages' text with a plain regex tokenizer.
     */
-  private def checkDf(pagesDir: String, idx: String): Unit = {
+  private def checkBuild(pagesDir: String, idx: String): Unit = {
+    val nDocs = new IndexReader(spark, idx).fieldStats.get("text").map(_.nDocs)
+    check(nDocs.contains(spec.pagesCount.toLong), s"build: fieldstats n_docs $nDocs != ${spec.pagesCount} pages")
     val s = spark
     import s.implicits._
     val terms = spec.dfTerms.toSet
@@ -277,7 +269,8 @@ final class Run(spec: Spec, work: String) {
   }
 
   /** A closed-loop query stream on a primed index: one client, then
-    * `spec.cpus` clients.
+    * `spec.cpus` clients. The single client's unit operation is a block of
+    * the stream, one query of each shape, timed as its mean query latency.
     */
   def serve(): Seq[(String, (Double, String))] = {
     val ((pagesDir, idx, reader), setupS) = setUp { dir =>
@@ -288,25 +281,32 @@ final class Run(spec: Spec, work: String) {
       (s"$dir/pages", s"$dir/index", r)
     }
     extra("search.cache_bytes") = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum.toDouble
+    checkBuild(pagesDir, idx)
     val searcher = new Searcher(reader, Schema, collectorCache = None)
     val answers = new ConcurrentLinkedQueue[(Q, Answer)]
     val stream = spec.queries
     val shapes = stream.map(_.shape).distinct.size
+    warmUp(searcher)
 
     // one client: the first 60% of the window, in whole blocks of the
     // stream so that the shape mix is the same in every run
     val t0 = System.nanoTime()
     var i = 0
+    var blockS = 0.0
     while (elapsed(t0) < 0.6 * spec.seconds || i % shapes != 0) {
       val q = stream(i % stream.size)
       // a traced run traces whole blocks of the stream, so each traced
       // block holds every shape once
       val on = traced(i / shapes)
       op(s"op.query.${q.shape}", i, on)(runQuery(searcher, q)).foreach { case (secs, a) =>
-        samples.add((secs, on))
+        blockS += secs
         answers.add((q, a))
       }
       i += 1
+      if (i % shapes == 0) {
+        samples.add((blockS / shapes, on))
+        blockS = 0.0
+      }
     }
     val singleClient = i
 
@@ -365,8 +365,12 @@ final class Run(spec: Spec, work: String) {
     var tombstones = 0L
     var segmentsLive = 0
     var j = 0
-    var spent = 0.0
-    while ((j < 2 || spent < 0.7 * spec.seconds) && j < spec.batches.size) {
+    // batch 0 and its probes are checked but untimed: with the warm-up
+    // queries run after them, they warm the upsert and tombstoned paths.
+    // Timed batches fill 70% of the window; compaction closes it.
+    var t0 = System.nanoTime()
+    while ((j < 3 || elapsed(t0) < 0.7 * spec.seconds) && j < spec.batches.size) {
+      val timed = j > 0
       val b = spec.batches(j)
       val batchDir = s"$work/batch$j"
       writeBatch(b, batchDir)
@@ -378,9 +382,10 @@ final class Run(spec: Spec, work: String) {
         r
       }
       res.foreach { case (secs, reader) =>
-        upsertS += secs
-        spent += secs
-        upserted += b.size
+        if (timed) {
+          upsertS += secs
+          upserted += b.size
+        }
         liveKeys += b.newCount
         keyRanges += ((b.newStart, b.newCount))
         b.overKeys.indices.foreach(i => contentOf(b.overKeys(i)) = b.contentStart + i)
@@ -393,12 +398,15 @@ final class Run(spec: Spec, work: String) {
         for (p <- 0 until probesPerBatch) {
           val q = spec.queries(j * probesPerBatch + p)
           op("op.probe", q.id, traced(j))(runQuery(searcher, q)).foreach { case (qs, a) =>
-            samples.add((qs, traced(j)))
-            spent += qs
+            if (timed) samples.add((qs, traced(j)))
             answers += ((q, a))
           }
         }
         checkAnswers(searcher, answers)
+        if (!timed) {
+          warmUp(searcher)
+          t0 = System.nanoTime()
+        }
       }
       deleteDir(batchDir)
       j += 1
@@ -429,7 +437,10 @@ final class Run(spec: Spec, work: String) {
     // compared with their pages, written once more as parquet
     val livePagesDir = s"$work/live-pages"
     writeLivePages(keyRanges.toSeq, contentOf, livePagesDir)
-    finish(setupS, upserted / (upsertS.sum + compactS), livePagesDir, idx)
+    // pages written per second of maintenance: the upserted pages plus the
+    // live pages compaction rewrites, so that the rate barely depends on how
+    // many batches fit in the window
+    finish(setupS, (upserted + liveKeys) / (upsertS.sum + compactS), livePagesDir, idx)
   }
 
   /** An upsert batch as pages parquet: fresh keys, then overwrites of live
@@ -472,10 +483,9 @@ final class Run(spec: Spec, work: String) {
     if (!spec.trace)
       Seq(
         "setup_s" -> (setupS, "s"),
+        // a run holds fewer than 40 unit operations, so no percentile
+        // above the median has ten samples beyond it
         "op_p50_ms" -> (1000 * median(untraced), "ms"),
-        // a run holds 7 to 40 unit operations: the 75th percentile is the
-        // highest with ten samples beyond it at 40
-        "op_p75_ms" -> (1000 * quantile(untraced, 0.75), "ms"),
         "work_per_s" -> (workPerS, "1/s"),
         "index_size_ratio" -> (ratio, "ratio"),
         "peak_rss_mb" -> (rssMb, "MB"))

@@ -48,6 +48,7 @@ final case class Spec(
     pagesCount: Int,
     dfTerms: Seq[String],
     queries: Vector[Q],
+    warmup: Vector[Q],
     batches: Vector[Batch])
 
 object Spec {
@@ -56,6 +57,8 @@ object Spec {
     def one(kind: String): Vector[String] =
       recs.find(_.head == kind).getOrElse(sys.error(s"spec has no $kind record")).tail
     val pages = one("pages")
+    def queries(kind: String): Vector[Q] =
+      recs.filter(_.head == kind).zipWithIndex.map { case (r, i) => Q(i, r(1), r(2).toInt, r.drop(3)) }
     Spec(
       workload = one("workload").head,
       seed = one("seed").head.toLong,
@@ -65,9 +68,8 @@ object Spec {
       pagesStart = pages(0).toLong,
       pagesCount = pages(1).toInt,
       dfTerms = recs.filter(_.head == "df_term").map(_(1)),
-      queries = recs.filter(_.head == "query").zipWithIndex.map { case (r, i) =>
-        Q(i, r(1), r(2).toInt, r.drop(3))
-      },
+      queries = queries("query"),
+      warmup = queries("warmup"),
       batches = recs.filter(_.head == "batch").map(r =>
         Batch(r(1).toLong, r(2).toInt, r(3).toLong, r.drop(4).map(_.toLong).toArray))
     )

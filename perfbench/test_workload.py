@@ -4,7 +4,7 @@ import unittest
 
 import workload
 
-WORKLOADS = ("build", "serve", "ingest")
+WORKLOADS = ("serve", "ingest")
 
 
 class SeedTest(unittest.TestCase):
@@ -19,7 +19,7 @@ class SeedTest(unittest.TestCase):
         for wl in WORKLOADS:
             a = workload.make_spec(wl, 7, 10, 0, 4)
             b = workload.make_spec(wl, 8, 10, 0, 4)
-            for kind in ("pages", "df_term", "query", "batch"):
+            for kind in ("pages", "df_term", "warmup", "query", "batch"):
                 ra = [r for r in a if r[0] == kind]
                 rb = [r for r in b if r[0] == kind]
                 if ra or rb:
@@ -36,6 +36,14 @@ class SeedTest(unittest.TestCase):
         n = len(workload.SHAPES)
         for i in range(0, len(stream) - n + 1, n):
             self.assertEqual(sorted(s for s, _, _ in stream[i:i + n]), sorted(workload.SHAPES))
+
+    def test_warmup_queries_are_not_measured_ones(self):
+        for wl, n in (("serve", workload.SERVE_WARMUP), ("ingest", workload.INGEST_WARMUP)):
+            spec = workload.make_spec(wl, 5, 10, 0, 4)
+            warm = {tuple(r[1:]) for r in spec if r[0] == "warmup"}
+            timed = {tuple(r[1:]) for r in spec if r[0] == "query"}
+            self.assertEqual(len(warm), n, wl)
+            self.assertFalse(warm & timed, wl)
 
     def test_upserts_overwrite_only_live_keys(self):
         spec = workload.make_spec("ingest", 3, 10, 0, 4)

@@ -10,9 +10,8 @@ Spec format: one record per line, tab-separated, first field the record kind.
 import random
 
 # Corpus sizes, in PageGen pages. Chosen so that one run of any workload
-# (three set-ups, the timed window, the output checks) ends well inside the
-# per-run limit on a 4-core host.
-BUILD_PAGES = 25_000
+# (three set-ups, the warm-up, the timed window, the output checks) ends well
+# inside the per-run limit on a 4-core host.
 SERVE_PAGES = 25_000
 INGEST_BASE_PAGES = 25_000
 # Each upsert batch: half new keys, half overwrites of live keys.
@@ -23,7 +22,13 @@ INGEST_PROBES_PER_BATCH = 10
 # Query-stream length: at least 200 distinct queries, more than one client
 # gets through in a run, so no query repeats within the single-client pass.
 STREAM_LENGTH = 600
-# Seeded sample of terms whose document frequency the build check recounts.
+# Warm-up queries, distinct from the measured ones, run before the timed
+# window so that it measures JIT-compiled code. `ingest` warms up with its
+# first upsert and that batch's probes too, so it needs fewer.
+SERVE_WARMUP = 40
+INGEST_WARMUP = 10
+# Seeded sample of terms whose document frequency the check of the served
+# index recounts.
 DF_SAMPLE_TERMS = 8
 
 SHAPES = ("term", "or", "and", "phrase", "match", "dismax", "head", "count", "fetch", "k100")
@@ -90,6 +95,14 @@ def query_stream(rng, n):
     return out[:n]
 
 
+def _queries(stream, measured):
+    """Records of a stream whose last `measured` queries are timed and whose
+    first ones are warm-up."""
+    cut = len(stream) - measured
+    return [["warmup" if i < cut else "query", s, str(k)] + words
+            for i, (s, k, words) in enumerate(stream)]
+
+
 def make_spec(workload, seed, seconds, trace, cpus):
     """Return the spec records (lists of strings) for one run."""
     rng = random.Random("perfbench/%s/%d" % (workload, seed))
@@ -101,15 +114,12 @@ def make_spec(workload, seed, seconds, trace, cpus):
         ["trace", str(int(trace))],
         ["cpus", str(cpus)],
     ]
-    if workload == "build":
-        recs.append(["pages", str(base), str(BUILD_PAGES)])
+    if workload == "serve":
+        recs.append(["pages", str(base), str(SERVE_PAGES)])
         for t in rng.sample(range(1000), DF_SAMPLE_TERMS):
             recs.append(["df_term", "body%d" % t])
         recs.append(["df_term", "title%d" % rng.randrange(100)])
-        # the traced run's standalone analyzer pass needs no queries
-    elif workload == "serve":
-        recs.append(["pages", str(base), str(SERVE_PAGES)])
-        recs += [["query", s, str(k)] + words for s, k, words in query_stream(rng, STREAM_LENGTH)]
+        recs += _queries(query_stream(rng, SERVE_WARMUP + STREAM_LENGTH), STREAM_LENGTH)
     elif workload == "ingest":
         recs.append(["pages", str(base), str(INGEST_BASE_PAGES)])
         fresh = base + INGEST_BASE_PAGES
@@ -123,8 +133,8 @@ def make_spec(workload, seed, seconds, trace, cpus):
                         [str(o) for o in over])
             live_rows.extend(range(fresh, fresh + half))
             fresh += 2 * half
-        probes = query_stream(rng, INGEST_MAX_BATCHES * INGEST_PROBES_PER_BATCH)
-        recs += [["query", s, str(k)] + words for s, k, words in probes]
+        n = INGEST_MAX_BATCHES * INGEST_PROBES_PER_BATCH
+        recs += _queries(query_stream(rng, INGEST_WARMUP + n), n)
     else:
         raise ValueError("unknown workload %r" % workload)
     return recs
