@@ -1,6 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -60,17 +63,6 @@ object IndexBuilder {
   /** Per-segment doc/token totals observed during the docs write. */
   final case class SegStat(segmentId: Int, nDocs: Long, tokensByField: Map[String, Long])
 
-  /** Per-term group inside one document field. `positions` is the doc's
-    * position list pre-packed to the block delta-varint layout
-    * ([[PostingCodec.packDocPositions]]) so shuffles and the columnar cache
-    * move ~1-2 bytes per occurrence, not a boxed int array.
-    */
-  final case class TermGroup(term: String, tf: Int, positions: Array[Byte])
-  /** Analyzed field: token count, quantized fieldnorm id, term groups
-    * (sorted by term).
-    */
-  final case class TokField(len: Int, norm: Int, terms: Array[TermGroup])
-
   /** One caller-provided token for the pre-tokenized input path — the
     * Spark-native shape of a tantivy `PreTokenizedString` entry
     * (`summa_document.rs:150-160`). Byte offsets are not retained: the
@@ -78,15 +70,17 @@ object IndexBuilder {
     */
   final case class PreToken(position: Int, text: String)
 
-  /** The FLAT analyzed-field shape the build pipeline carries: primitive
-    * byte blobs instead of an array of [[TermGroup]] structs. Catalyst
-    * encodes this far faster than the nested shape, and building it directly
-    * from the accumulator map allocates no intermediate TermGroup objects —
-    * allocation churn is the memory-bandwidth tax the wide build pays
-    * hardest. Terms travel as ONE UTF-8 blob + offsets rather than
-    * `array<string>`, and ALL int arrays (term offsets, tfs, position
-    * offsets) travel packed inside the varint `meta` section rather than
-    * `array<int>` columns: an `array<int>` crosses the external-Row boundary
+  /** The analyzed-field shape every tokenize path produces: token count,
+    * quantized fieldnorm id, and the doc's term groups as ONE primitive byte
+    * blob. Each term's positions are pre-packed to the block delta-varint
+    * layout ([[PostingCodec.packDocPositions]]), so shuffles and the columnar
+    * cache move ~1-2 bytes per occurrence. Catalyst encodes a flat blob far
+    * faster than an array of per-term structs, and building it straight from
+    * the accumulator allocates no per-term objects — allocation churn is the
+    * memory-bandwidth tax the wide build pays hardest. Terms travel as ONE
+    * UTF-8 blob + offsets rather than `array<string>`, and ALL int arrays
+    * (term offsets, tfs, position offsets) travel packed inside the varint
+    * `meta` section rather than `array<int>` columns: an `array<int>` crosses the external-Row boundary
     * of the pack's mapPartitions through a boxed MapObjects loop (a measured
     * ~27% of the pack's fill cpu in JFR), while a binary column is a single
     * memcpy each way and is consumed by absolute-offset int reads.
@@ -246,7 +240,7 @@ object IndexBuilder {
     TokFlat(len, norm, blob)
   }
 
-  /** Per-term accumulator for [[analyzeField]]: tf + the delta-varint
+  /** Per-term accumulator for the tokenize paths: tf + the delta-varint
     * position bytes written INCREMENTALLY (byte-identical to
     * [[PostingCodec.packDocPositions]] over the collected array). Avoids the
     * per-token churn of the naive TreeMap[String, ArrayBuffer[Int]] grouping
@@ -277,40 +271,18 @@ object IndexBuilder {
     }
   }
 
-  /** Tokenize one field value into term groups (deterministic order: terms
-    * sorted by natural String order, positions in token order).
-    */
-  def analyzeField(analyzerName: String, value: String): TokField = {
-    if (value == null) return TokField(0, 0, Array.empty)
-    val toks = Analyzers(analyzerName).tokenize(value)
-    groupTokens(toks.length, i => toks(i).text, i => toks(i).position)
-  }
-
   /** Group caller-provided tokens into term groups, BYPASSING the analyzer —
     * the pre-tokenized string path (reference `summa_document.rs:150-160`:
     * a JSON object on a str field parses as a tantivy `PreTokenizedString`
     * and indexes its given tokens/positions verbatim). Fieldnorm = token
     * count, exactly like the analyzed path.
     */
-  def analyzePreTokenized(toks: Seq[PreToken]): TokField = {
+  def analyzePreTokenized(toks: Seq[PreToken]): TokFlat = {
     // the position delta-varint accumulator requires non-decreasing
     // positions per term; tokens normally arrive in position order (tantivy
     // contract) but caller input is sorted defensively
     val arr = toks.sortBy(_.position).toIndexedSeq
-    groupTokens(arr.length, i => arr(i).text, i => arr(i).position)
-  }
-
-  private def groupTokens(n: Int, text: Int => String, pos: Int => Int): TokField = {
-    val m = accumulate(n, text, pos)
-    val terms = sortedTerms(m)
-    val groups = new Array[TermGroup](terms.length)
-    var i = 0
-    while (i < terms.length) {
-      val acc = m.get(terms(i))
-      groups(i) = TermGroup(terms(i), acc.tf, java.util.Arrays.copyOf(acc.buf, acc.len))
-      i += 1
-    }
-    TokField(n, FieldNorm.encode(n.toLong), groups)
+    groupTokensFlat(arr.length, i => arr(i).text, i => arr(i).position)
   }
 
   private def accumulate(
@@ -333,12 +305,18 @@ object IndexBuilder {
     terms
   }
 
-  private val EmptyTokFlat =
+  private[index] val EmptyTokFlat =
     mkTokFlat(0, 0, Array.empty, Array.empty, Array.empty, Array(0))
 
-  /** Flat-shape tokenize for the build's hot path: same grouping semantics
-    * as [[analyzeField]] (term-sorted, positions in token order, byte-
-    * identical packed deltas) with zero intermediate group objects.
+  /** One term at position 0 (len 1): raw analyzers and typed (bytes/ip)
+    * values. The packed position delta-varint of position 0 is `[0x00]`.
+    */
+  private[index] def singleTermFlat(term: String): TokFlat =
+    mkTokFlat(1, FieldNorm.encode(1L), Array(term), Array(1), Array(0.toByte), Array(0, 1))
+
+  /** Tokenize for the build's hot path: same grouping semantics as
+    * [[analyzeFieldFlatLegacy]] (positions in token order, byte-identical
+    * packed deltas) with zero intermediate group objects.
     *
     * Word-run analyzers stream through the [[graft.analysis.FusedTokenize]] /
     * [[FusedAcc]] pair (no Token objects, no filter-chain Vector copies, a
@@ -357,19 +335,15 @@ object IndexBuilder {
         acc.result()
       case None if analyzerName == "raw" || analyzerName == "raw_ci" =>
         if (value.isEmpty) EmptyTokFlat
-        else {
-          val term = if (analyzerName == "raw_ci") value.toLowerCase else value
-          // single token at position 0: packed position delta-varint = [0x00]
-          mkTokFlat(1, FieldNorm.encode(1L),
-            Array(term), Array(1), Array(0.toByte), Array(0, 1))
-        }
+        else singleTermFlat(if (analyzerName == "raw_ci") value.toLowerCase else value)
       case None => analyzeFieldFlatLegacy(analyzerName, value)
     }
   }
 
-  /** The pre-fusion flat tokenize (materializes the `Token` vector through
-    * the full filter chain) — kept as the semantic reference for the fused
-    * path and the route for complex tokenizer bases.
+  /** The pre-fusion tokenize (materializes the `Token` vector through the
+    * full filter chain; terms sorted by natural String order) — kept as the
+    * semantic reference for the fused path and the route for complex
+    * tokenizer bases.
     */
   def analyzeFieldFlatLegacy(analyzerName: String, value: String): TokFlat = {
     if (value == null) return EmptyTokFlat
@@ -720,7 +694,10 @@ object IndexBuilder {
     }
   }
 
-  private def groupTokensFlat(n: Int, text: Int => String, pos: Int => Int): TokFlat = {
+  /** Group `n` tokens (text, position) into a term-sorted TokFlat; each
+    * term's positions must arrive non-decreasing (delta-varint packing).
+    */
+  private[index] def groupTokensFlat(n: Int, text: Int => String, pos: Int => Int): TokFlat = {
     val m = accumulate(n, text, pos)
     val terms = sortedTerms(m)
     val k = terms.length
@@ -744,33 +721,6 @@ object IndexBuilder {
       i += 1
     }
     mkTokFlat(n, FieldNorm.encode(n.toLong), terms, tfs, posFlat, posOff)
-  }
-
-  /** Nested → flat conversion for the cold token paths (json / bytes / ip
-    * analyzers return the nested shape).
-    */
-  def toFlat(tf: TokField): TokFlat = {
-    val k = tf.terms.length
-    val terms = new Array[String](k)
-    val tfs = new Array[Int](k)
-    val posOff = new Array[Int](k + 1)
-    var total = 0
-    var i = 0
-    while (i < k) {
-      terms(i) = tf.terms(i).term
-      tfs(i) = tf.terms(i).tf
-      posOff(i) = total
-      total += tf.terms(i).positions.length
-      i += 1
-    }
-    posOff(k) = total
-    val posFlat = new Array[Byte](total)
-    i = 0
-    while (i < k) {
-      System.arraycopy(tf.terms(i).positions, 0, posFlat, posOff(i), tf.terms(i).positions.length)
-      i += 1
-    }
-    mkTokFlat(tf.len, tf.norm, terms, tfs, posFlat, posOff)
   }
 
   /** The canonical doc-order shuffle feeding [[assignDocIds]]: range
@@ -913,92 +863,6 @@ object IndexBuilder {
     StructField("posting_bytes", LongType, false)
   ))
 
-  /** Pack token rows `(segment_id, doc_id, field, term, tf, norm_id,
-    * positions)` into posting-block rows via ONE range shuffle keyed by
-    * (segment, field, term, block): block keying spreads head terms across
-    * ~(docs/blockSpan) keys (skew salt), range partitioning gives term-sorted
-    * output files (Parquet stats pruning), and the streaming sort-merge pack
-    * replaces an object hash aggregate (no per-group buffers, fully
-    * spillable Tungsten sort). Shared by fresh builds and segment merges.
-    */
-  def packPostings(
-      tokens: DataFrame,
-      blockBits: Int,
-      parts: Int,
-      recordPositions: Map[String, Boolean]
-  ): DataFrame = {
-    val spark = tokens.sparkSession
-    val bcRecPos = spark.sparkContext.broadcast(recordPositions)
-    val parted = tokens
-      .select(
-        col("segment_id"), col("doc_id"), col("field"), col("term"),
-        col("tf"), col("norm_id"), col("positions"))
-      .withColumn("block_id", shiftright(col("doc_id"), blockBits).cast(IntegerType))
-      // hash, not range: RangePartitioning's sampling job would execute the
-      // upstream plan (for merges: the posting unpack + rebase join) twice
-      .repartition(parts, col("segment_id"), col("field"), col("term"), col("block_id"))
-      .sortWithinPartitions("segment_id", "field", "term", "block_id", "doc_id")
-
-    parted.mapPartitions { rows =>
-      val recPos = bcRecPos.value
-      new Iterator[Row] {
-        private val it = rows.buffered
-        def hasNext: Boolean = it.hasNext
-        def next(): Row = {
-          val head = it.head
-          val seg = head.getInt(0)
-          val field = head.getString(2)
-          val term = head.getString(3)
-          val blockId = head.getInt(7)
-          val docIds = new scala.collection.mutable.ArrayBuffer[Int](64)
-          val tfs = new scala.collection.mutable.ArrayBuffer[Int](64)
-          val norms = new scala.collection.mutable.ArrayBuffer[Int](64)
-          val poss = new scala.collection.mutable.ArrayBuffer[Array[Byte]](64)
-          var posLen = 0
-          val withPos = recPos.getOrElse(field, false)
-          var more = true
-          while (more && it.hasNext) {
-            val r = it.head
-            if (r.getInt(0) == seg && r.getString(2) == field && r.getString(3) == term &&
-                r.getInt(7) == blockId) {
-              it.next()
-              docIds += r.getInt(1)
-              tfs += r.getInt(4)
-              norms += r.getInt(5)
-              if (withPos) {
-                val pb = r.getAs[Array[Byte]](6)
-                poss += pb
-                posLen += pb.length
-              }
-            } else more = false
-          }
-          val docIdsA = docIds.toArray
-          val tfsA = tfs.toArray
-          val docIdsB = PostingCodec.packDocIds(docIdsA)
-          val tfsB = PostingCodec.packVarInts(tfsA)
-          val normsB = norms.map(_.toByte).toArray
-          // block positions = concatenation of the pre-packed per-doc runs
-          // (bit-identical to packing the decoded arrays here)
-          val posB = if (withPos) {
-            val b = new Array[Byte](posLen)
-            var o = 0
-            poss.foreach { pb => System.arraycopy(pb, 0, b, o, pb.length); o += pb.length }
-            b
-          } else null
-          val bytes = docIdsB.length.toLong + tfsB.length + normsB.length +
-            (if (posB == null) 0 else posB.length)
-          Row(
-            field, term, seg, blockId,
-            docIdsA.length, docIdsA.head, docIdsA.last,
-            tfsA.max, norms.min,
-            tfsA.map(_.toLong).sum,
-            docIdsB, tfsB, normsB, posB, bytes
-          )
-        }
-      }
-    }(Encoders.row(packSchema))
-  }
-
   /** Growable primitive int buffer — `ArrayBuffer[Int]` boxes every append,
     * and the pack phase appends 2 ints per posting; at 10^12 postings the
     * box garbage is pure memory-bandwidth tax on the widest phase (the
@@ -1035,6 +899,34 @@ object IndexBuilder {
       if (pos != null) pos.clear()
       maxTf = 0; minNorm = 255; sumTf = 0L
     }
+    /** Append one posting in doc order (its positions go to `pos`). */
+    def add(doc: Int, tf: Int, norm: Byte): Unit = {
+      docIds += doc
+      tfs += tf
+      norms += norm
+      if (tf > maxTf) maxTf = tf
+      val ni = norm & 0xFF
+      if (ni < minNorm) minNorm = ni
+      sumTf += tf
+    }
+  }
+
+  /** Encode one fragment as a [[packSchema]] row — the ONE block encoder:
+    * the build's map side, the merge's remap and the run merge all emit
+    * through it, so equal postings always encode to equal block bytes.
+    */
+  private def emitFrag(field: String, term: String, f: Frag, seg: Int, block: Int): Row = {
+    val docIdsA = f.docIds.toArray
+    val docIdsB = PostingCodec.packDocIds(docIdsA)
+    val tfsB = PostingCodec.packVarInts(f.tfs.toArray)
+    val normsB = f.norms.toArray
+    val posB = if (f.pos == null) null else f.pos.toArray
+    val bytes = docIdsB.length.toLong + tfsB.length + normsB.length +
+      (if (posB == null) 0 else posB.length)
+    Row(field, term, seg, block,
+      docIdsA.length, docIdsA(0), docIdsA(docIdsA.length - 1),
+      f.maxTf, f.minNorm, f.sumTf,
+      docIdsB, tfsB, normsB, posB, bytes)
   }
 
   /** Open-addressed (term-bytes → [[Frag]]) table for the map-side pack,
@@ -1140,12 +1032,8 @@ object IndexBuilder {
     * bottleneck at every core count).
     *
     * A block whose docId range straddles an input-partition boundary yields
-    * one fragment per partition; the reduce side merges consecutive
-    * fragments after a range shuffle on (segment, field, term, block) —
-    * fragments never interleave (partitions hold disjoint contiguous doc
-    * ranges), so the merged block bytes are IDENTICAL to a single-pass pack:
-    * only the absolute first docId varint of each later run is rewritten as
-    * a delta.
+    * one fragment per partition; the shared reduce ([[mergeFragmentRuns]])
+    * merges them into the block a single-pass pack would have written.
     */
   def packFromAnalyzed(
       analyzed: DataFrame,
@@ -1171,25 +1059,14 @@ object IndexBuilder {
         private var curBlock = Int.MinValue
         private var finalFlushDone = false
 
-        private def emit(fi: Int, term: Array[Byte], f: Frag, seg: Int, block: Int): Row = {
-          val docIdsA = f.docIds.toArray
-          val docIdsB = PostingCodec.packDocIds(docIdsA)
-          val tfsB = PostingCodec.packVarInts(f.tfs.toArray)
-          val normsB = f.norms.toArray
-          val posB = if (f.pos == null) null else f.pos.toArray
-          val bytes = docIdsB.length.toLong + tfsB.length + normsB.length +
-            (if (posB == null) 0 else posB.length)
-          Row(fieldNames(fi), new String(term, java.nio.charset.StandardCharsets.UTF_8),
-            seg, block,
-            docIdsA.length, docIdsA(0), docIdsA(docIdsA.length - 1),
-            f.maxTf, f.minNorm, f.sumTf,
-            docIdsB, tfsB, normsB, posB, bytes)
-        }
-
         private def flushAll(seg: Int, block: Int): Unit = {
           var fi = 0
           while (fi < nFields) {
-            maps(fi).forEach((term, frag) => { pending.add(emit(fi, term, frag, seg, block)); () })
+            maps(fi).forEach { (term, frag) =>
+              pending.add(emitFrag(fieldNames(fi),
+                new String(term, java.nio.charset.StandardCharsets.UTF_8), frag, seg, block))
+              ()
+            }
             maps(fi).clear()
             fi += 1
           }
@@ -1237,13 +1114,7 @@ object IndexBuilder {
                 val posUntil = posFrom + metaReader.next()
                 val frag = m.fragFor(blob, termFrom, termUntil)
                 termFrom = termUntil
-                frag.docIds += doc
-                frag.tfs += tf
-                frag.norms += norm
-                if (tf > frag.maxTf) frag.maxTf = tf
-                val ni = norm & 0xFF
-                if (ni < frag.minNorm) frag.minNorm = ni
-                frag.sumTf += tf
+                frag.add(doc, tf, norm)
                 if (withPos) frag.pos.append(blob, posFrom, posUntil)
                 posFrom = posUntil
                 gi += 1
@@ -1262,99 +1133,178 @@ object IndexBuilder {
       }
     }(Encoders.row(packSchema))
 
-    // reduce: HASH-shuffle the packed fragments on (segment, field, term) and
-    // merge the (rare) partition-boundary splits; single-fragment blocks pass
-    // through with zero decode. Hash, not range: RangePartitioning runs a
-    // sampling job that would EXECUTE THE ENTIRE MAP-SIDE PACK A SECOND TIME
-    // just to pick bounds. Hash keeps all of a term's blocks in one file per
-    // segment, and the within-partition sort below keeps row-group min/max
-    // stats tight for term-predicate pruning — the pruning queries actually
-    // use; only cross-FILE range locality is given up.
+    mergeFragmentRuns(fragments, blockBits, parts)
+  }
+
+  /** Segment-merge posting pack: re-blocks the old segments' packed block
+    * rows into `newSeg` without exploding them to per-posting rows. The map
+    * side is the only merge-specific code: each old block is decoded, its
+    * tombstoned docs dropped, its doc ids remapped, and the survivors cut at
+    * new-block boundaries into fragments through the build's encoder. The
+    * reduce is the build's [[mergeFragmentRuns]]; pieces of different old
+    * segments interleave inside a new block (new ids are key ranks over the
+    * merged set), which the run merge places by doc id.
+    *
+    * @param remap per old segment, `old doc_id -> new doc_id` (-1, or past
+    *              the array's end: tombstoned)
+    */
+  private[index] def packMerged(
+      postings: DataFrame,
+      newSeg: Int,
+      remap: Broadcast[Map[Int, Array[Int]]],
+      blockBits: Int,
+      parts: Int
+  ): DataFrame = {
+    val fragments = postings
+      .select(packSchema.fieldNames.toSeq.map(col): _*)
+      .mapPartitions { rows =>
+        val maps = remap.value
+        val frags = Array(new Frag(false), new Frag(true))
+        rows.flatMap { r =>
+          val map = maps.getOrElse(r.getInt(2), Array.emptyIntArray)
+          val n = r.getInt(4)
+          val ids = PostingCodec.unpackDocIds(r.getAs[Array[Byte]](10), n)
+          val tfs = PostingCodec.unpackVarInts(r.getAs[Array[Byte]](11), n)
+          val norms = r.getAs[Array[Byte]](12)
+          val pb = r.getAs[Array[Byte]](13)
+          val posOff = if (pb == null) null else PostingCodec.positionOffsets(pb, tfs)
+          // surviving postings as (new doc << 32 | index), sorted: docs that
+          // share a key tie in the merge's (segment, key) sort, whose tie
+          // order Spark does not fix, so the remap is monotone only for
+          // distinct keys
+          val kept = new Array[Long](n)
+          var m = 0
+          var i = 0
+          while (i < n) {
+            val nd = if (ids(i) < map.length) map(ids(i)) else -1
+            if (nd >= 0) { kept(m) = (nd.toLong << 32) | i; m += 1 }
+            i += 1
+          }
+          java.util.Arrays.sort(kept, 0, m)
+          val f = frags(if (pb == null) 0 else 1)
+          val out = ArrayBuffer.empty[Row]
+          var j = 0
+          while (j < m) {
+            val block = (kept(j) >>> 32).toInt >>> blockBits
+            f.reset()
+            while (j < m && ((kept(j) >>> 32).toInt >>> blockBits) == block) {
+              val p = kept(j).toInt
+              f.add((kept(j) >>> 32).toInt, tfs(p), norms(p))
+              if (pb != null) f.pos.append(pb, posOff(p), posOff(p + 1))
+              j += 1
+            }
+            out += emitFrag(r.getString(0), r.getString(1), f, newSeg, block)
+          }
+          out
+        }
+      }(Encoders.row(packSchema))
+    mergeFragmentRuns(fragments, blockBits, parts)
+  }
+
+  /** The reduce of every posting pack: HASH-shuffle [[packSchema]]
+    * fragments on (segment, field, term), sort by (block, first_doc), and
+    * merge each (segment, field, term, block) run with a [[RunMerger]];
+    * single-fragment blocks pass through with zero decode. Hash, not range:
+    * RangePartitioning runs a sampling job that would EXECUTE THE ENTIRE
+    * MAP SIDE A SECOND TIME just to pick bounds. Hash keeps all of a term's
+    * blocks in one file per segment, and the within-partition sort keeps
+    * row-group min/max stats tight for term-predicate pruning — the pruning
+    * queries actually use; only cross-FILE range locality is given up.
+    */
+  private def mergeFragmentRuns(fragments: DataFrame, blockBits: Int, parts: Int): DataFrame =
     fragments
       .repartition(parts, col("segment_id"), col("field"), col("term"))
       .sortWithinPartitions("segment_id", "field", "term", "block_id", "first_doc")
       .mapPartitions { rows =>
         val it = rows.buffered
+        val merger = new RunMerger(blockBits)
         new Iterator[Row] {
           def hasNext: Boolean = it.hasNext
           def next(): Row = {
             val head = it.next()
             if (!it.hasNext || !sameKey(head, it.head)) head
             else {
-              val run = scala.collection.mutable.ArrayBuffer(head)
-              while (it.hasNext && sameKey(head, it.head)) run += it.next()
-              mergeFragments(run.toSeq)
+              merger.add(head)
+              while (it.hasNext && sameKey(head, it.head)) merger.add(it.next())
+              merger.result(head)
             }
           }
         }
       }(Encoders.row(packSchema))
-  }
 
   private def sameKey(a: Row, b: Row): Boolean =
     a.getInt(2) == b.getInt(2) && a.getInt(3) == b.getInt(3) &&
       a.getString(0) == b.getString(0) && a.getString(1) == b.getString(1)
 
-  /** Merge fragments of one (segment, field, term, block), ordered by
-    * first_doc: binary runs concatenate; only each later run's leading
-    * absolute docId varint is rewritten as a delta from the previous run's
-    * last docId — yielding bytes identical to a single-pass pack.
+  /** Merges the fragments of one (segment, field, term, block) run into
+    * one block row. Fragments may overlap in doc range (a merge's pieces of
+    * different old segments), so each posting is placed at its slot
+    * `doc_id - block start` of an occupancy bitmap; a block spans at most
+    * `2^blockBits` docs, and scanning the bitmap yields doc order with no
+    * sort. One instance per reduce partition, reused across runs.
     */
-  private def mergeFragments(run: Seq[Row]): Row = {
-    var docLen = 0
-    var tfLen = 0
-    var normLen = 0
-    var posLen = 0
-    run.foreach { r =>
-      docLen += r.getAs[Array[Byte]](10).length
-      tfLen += r.getAs[Array[Byte]](11).length
-      normLen += r.getAs[Array[Byte]](12).length
-      val p = r.getAs[Array[Byte]](13)
-      if (p != null) posLen += p.length
-    }
-    val doc = new PostingCodec.ByteVec(docLen + run.size * 5)
-    val tfs = new Array[Byte](tfLen)
-    val norms = new Array[Byte](normLen)
-    val pos = if (run.head.get(13) == null) null else new Array[Byte](posLen)
-    var tfO = 0
-    var nO = 0
-    var pO = 0
-    var prevLast = -1
-    var count = 0
-    var maxTf = 0
-    var minNorm = 255
-    var sumTf = 0L
-    run.foreach { r =>
-      val db = r.getAs[Array[Byte]](10)
-      if (prevLast < 0) doc.append(db, 0, db.length)
-      else {
-        // skip the absolute first-doc varint, re-encode as delta
-        var p = 0
-        while ((db(p) & 0x80) != 0) p += 1
-        p += 1
-        doc.addVarInt(r.getInt(5) - prevLast)
-        doc.append(db, p, db.length)
+  private final class RunMerger(blockBits: Int) {
+    private val occupied = new Array[Long](((1 << blockBits) + 63) >>> 6)
+    private val fragAt = new Array[Int](1 << blockBits)
+    private val idxAt = new Array[Int](1 << blockBits)
+    private val tfs = ArrayBuffer.empty[Array[Int]]
+    private val norms = ArrayBuffer.empty[Array[Byte]]
+    private val pos = ArrayBuffer.empty[Array[Byte]]
+    private val posOff = ArrayBuffer.empty[Array[Int]]
+    private val out = Array(new Frag(false), new Frag(true))
+    private var lo = Int.MaxValue // occupied word range of the current run
+    private var hi = -1
+
+    def add(r: Row): Unit = {
+      val n = r.getInt(4)
+      val ids = PostingCodec.unpackDocIds(r.getAs[Array[Byte]](10), n)
+      val tf = PostingCodec.unpackVarInts(r.getAs[Array[Byte]](11), n)
+      val pb = r.getAs[Array[Byte]](13)
+      val k = tfs.length
+      tfs += tf
+      norms += r.getAs[Array[Byte]](12)
+      pos += pb
+      posOff += (if (pb == null) null else PostingCodec.positionOffsets(pb, tf))
+      val start = r.getInt(3) << blockBits
+      var i = 0
+      while (i < n) {
+        val slot = ids(i) - start
+        val w = slot >>> 6
+        val bit = 1L << slot
+        if ((occupied(w) & bit) != 0)
+          throw new IllegalStateException(s"doc ${ids(i)} packed twice for term ${r.getString(1)}")
+        occupied(w) |= bit
+        fragAt(slot) = k
+        idxAt(slot) = i
+        i += 1
       }
-      prevLast = r.getInt(6)
-      val tb = r.getAs[Array[Byte]](11)
-      System.arraycopy(tb, 0, tfs, tfO, tb.length); tfO += tb.length
-      val nb = r.getAs[Array[Byte]](12)
-      System.arraycopy(nb, 0, norms, nO, nb.length); nO += nb.length
-      if (pos != null) {
-        val pb = r.getAs[Array[Byte]](13)
-        System.arraycopy(pb, 0, pos, pO, pb.length); pO += pb.length
-      }
-      count += r.getInt(4)
-      if (r.getInt(7) > maxTf) maxTf = r.getInt(7)
-      if (r.getInt(8) < minNorm) minNorm = r.getInt(8)
-      sumTf += r.getLong(9)
+      lo = math.min(lo, (ids(0) - start) >>> 6)
+      hi = math.max(hi, (ids(n - 1) - start) >>> 6)
     }
-    val docB = doc.toArray
-    val bytes = docB.length.toLong + tfs.length + norms.length +
-      (if (pos == null) 0 else pos.length)
-    val h = run.head
-    Row(h.getString(0), h.getString(1), h.getInt(2), h.getInt(3),
-      count, h.getInt(5), prevLast, maxTf, minNorm, sumTf,
-      docB, tfs, norms, pos, bytes)
+
+    /** The block row of the fragments added since the last call. */
+    def result(head: Row): Row = {
+      val f = out(if (pos(0) == null) 0 else 1)
+      f.reset()
+      val start = head.getInt(3) << blockBits
+      var w = lo
+      while (w <= hi) {
+        var bits = occupied(w)
+        while (bits != 0) {
+          val slot = (w << 6) + java.lang.Long.numberOfTrailingZeros(bits)
+          val k = fragAt(slot)
+          val i = idxAt(slot)
+          f.add(start + slot, tfs(k)(i), norms(k)(i))
+          if (f.pos != null) f.pos.append(pos(k), posOff(k)(i), posOff(k)(i + 1))
+          bits &= bits - 1
+        }
+        occupied(w) = 0
+        w += 1
+      }
+      lo = Int.MaxValue; hi = -1
+      tfs.clear(); norms.clear(); pos.clear(); posOff.clear()
+      emitFrag(head.getString(0), head.getString(1), f, head.getInt(2), head.getInt(3))
+    }
   }
 
   private val timing = sys.env.get("GRAFT_BUILD_TIMING").contains("1")
@@ -1418,16 +1368,16 @@ object IndexBuilder {
     val tokCols: Map[String, org.apache.spark.sql.Column] = schema.fields.map { f =>
       val an = f.analyzer
       val expr = f.fieldType match {
-        case "json"  => udf((s: String) => toFlat(JsonField.analyzeJson(an, s))).apply(col(f.name).cast(StringType))
-        case "bytes" => udf((s: String) => toFlat(TypedFields.singleTok(Option(s).flatMap(TypedFields.bytesTerm)))).apply(col(f.name).cast(StringType))
-        case "ip"    => udf((s: String) => toFlat(TypedFields.singleTok(TypedFields.ipTerm(s)))).apply(col(f.name).cast(StringType))
+        case "json"  => udf((s: String) => JsonField.analyzeJson(an, s)).apply(col(f.name).cast(StringType))
+        case "bytes" => udf((s: String) => TypedFields.singleTok(Option(s).flatMap(TypedFields.bytesTerm))).apply(col(f.name).cast(StringType))
+        case "ip"    => udf((s: String) => TypedFields.singleTok(TypedFields.ipTerm(s))).apply(col(f.name).cast(StringType))
         case _ =>
           pages.schema.find(_.name == f.name).map(_.dataType) match {
             case Some(st: StructType)
                 if st.fieldNames.contains("text") && st.fieldNames.contains("tokens") =>
               udf((text: String, toks: Seq[PreToken]) =>
                 if (toks == null) analyzeFieldFlat(an, text)
-                else toFlat(analyzePreTokenized(toks)))
+                else analyzePreTokenized(toks))
                 .apply(col(s"${f.name}.text"), col(s"${f.name}.tokens"))
             case _ =>
               // native expression: tokenizes the UTF8String in place (ASCII
@@ -1462,13 +1412,10 @@ object IndexBuilder {
     // the cache-materializing scan pays for the group-by anyway, so neither
     // a separate stats job nor per-row CollectMetrics during the docs write
     // is needed (both showed up as the worst-scaling serial tail)
-    val lenAggs = schema.fields.map(f => sum(col(s"__len_${f.name}")).as(s"tt_${f.name}"))
     val (analyzed, sortedHandle, totalDocs, segAggs) =
-      timed("tokenize+sort+docids")(assignDocIds(sortedTok, parts, conf.persist, lenAggs))
-    val segStats: Seq[SegStat] = segAggs.toSeq.sortBy(_._1).map { case (seg, r) =>
-      SegStat(seg, r.getLong(0),
-        schema.fields.zipWithIndex.map { case (f, i) => f.name -> r.getLong(1 + i) }.toMap)
-    }
+      timed("tokenize+sort+docids")(assignDocIds(sortedTok, parts, conf.persist,
+        tokenTotals(schema, "__len_")))
+    val segStats = segStatsOf(schema, segAggs)
 
     // ---- docs table (doc store + fast fields + fieldnorms) ----
     // written DIRECTLY from the cached (segment, key)-sorted partitions: no
@@ -1488,12 +1435,6 @@ object IndexBuilder {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // zstd effort for the bulk index writes: posting payloads are already
-    // entropy-packed varints, so zstd's default level 3 buys ~2% size over
-    // level 1 at ~25% of the write stage's cpu — level 1 is the right
-    // default for the hot build path (callers can override the option via
-    // the standard hadoop conf)
-    val zstdLevel = "parquet.compression.codec.zstd.level"
     // (near-)distinct columns make the parquet dictionary writer hash every
     // value only to overflow its 1 MB page and fall back to plain — the
     // dictionary writers were ~8% of build JFR samples. Disable it for:
@@ -1518,7 +1459,7 @@ object IndexBuilder {
         .write
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .option(zstdLevel, "1")
+        .option(ZstdLevel, "1")
         .options(noDictCols)
         .partitionBy("segment_id")
         .parquet(s"$indexDir/docs"))
@@ -1533,70 +1474,94 @@ object IndexBuilder {
     // failure stays primary, a concurrent docs failure is secondary
     var primary: Throwable = null
     try {
-      timed("postings-pack-write")(
-        packFromAnalyzed(analyzed, schema.fields, conf.blockBits, parts, recordPositions).write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .option(zstdLevel, "1")
-          // the packed posting payloads are unique-per-row binaries: the
-          // dictionary writer hashes every value only to overflow and fall
-          // back to plain anyway (its rehash was a top-10 JFR leaf of the
-          // build) — turn it off for the payload columns, keep it for the
-          // low-cardinality field/term columns
-          .option("parquet.enable.dictionary#doc_ids", "false")
-          .option("parquet.enable.dictionary#tfs", "false")
-          .option("parquet.enable.dictionary#norms", "false")
-          .option("parquet.enable.dictionary#positions", "false")
-          // near-distinct per-block scalars: same overflow-then-fallback
-          // waste as the payloads (doc_count/max_tf/min_norm stay
-          // dictionaried — they live in small value ranges)
-          .option("parquet.enable.dictionary#first_doc", "false")
-          .option("parquet.enable.dictionary#last_doc", "false")
-          .option("parquet.enable.dictionary#sum_tf", "false")
-          .option("parquet.enable.dictionary#posting_bytes", "false")
-          .partitionBy("segment_id")
-          .parquet(s"$indexDir/postings"))
+      timed("postings-pack-write")(writePostings(
+        packFromAnalyzed(analyzed, schema.fields, conf.blockBits, parts, recordPositions),
+        indexDir))
     } catch { case t: Throwable => primary = t; throw t }
     finally {
       try Await.result(docsJob, Duration.Inf)
       catch { case t: Throwable => if (primary == null) throw t else primary.addSuppressed(t) }
     }
 
-    // stats re-read ONLY the narrow stat columns of the written blocks —
-    // column pruning makes this far cheaper than caching the full blocks
-    // (persisting them serialized every posting binary through the columnar
-    // cache, a memory-bandwidth tax the pack stage paid at every core count)
-    val segIds = (segOffset until segOffset + conf.numSegments).toSeq
-    val statCols = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("segment_id").isin(segIds.map(Integer.valueOf): _*))
-      .select("segment_id", "field", "term", "doc_count", "sum_tf", "posting_bytes")
-    // termstats is ~vocab-sized, orders of magnitude below docs — 64k-doc
-    // chunks keep its write at a handful of tasks instead of `parts` tiny
-    // ones (24 near-empty tasks measured 4× the run-time of 6)
-    val segs = timed("stats+metrics")(writeStats(spark, schema, indexDir, buildId, statCols,
+    val segs = timed("stats+metrics")(writeStats(spark, schema, indexDir, buildId,
       segStats, mergeDepth, parentSegments))
 
     sortedHandle.unpersist()
     segs
   }
 
-  /** Per-segment termstats/fieldstats from the just-built (still cached)
-    * postings/docs DataFrames, plus an append-only metrics lineage row per
-    * segment.
-    *
-    * @return the non-empty segment ids written (from the doc-count agg — no
-    *         extra read of the docs table)
+  /** zstd effort for the bulk index writes: posting payloads are already
+    * entropy-packed varints, so zstd's default level 3 buys ~2% size over
+    * level 1 at ~25% of the write stage's cpu — level 1 is the right default
+    * for the hot write paths (callers can override the option via the
+    * standard hadoop conf).
     */
-  private def writeStats(
+  private val ZstdLevel = "parquet.compression.codec.zstd.level"
+
+  /** The ONE postings writer (builds and merges): packed [[packSchema]]
+    * blocks, dynamic partition overwrite by segment.
+    */
+  private[index] def writePostings(postings: DataFrame, indexDir: String): Unit =
+    postings.write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .option(ZstdLevel, "1")
+      // the packed posting payloads are unique-per-row binaries: the
+      // dictionary writer hashes every value only to overflow and fall
+      // back to plain anyway (its rehash was a top-10 JFR leaf of the
+      // build) — turn it off for the payload columns, keep it for the
+      // low-cardinality field/term columns
+      .option("parquet.enable.dictionary#doc_ids", "false")
+      .option("parquet.enable.dictionary#tfs", "false")
+      .option("parquet.enable.dictionary#norms", "false")
+      .option("parquet.enable.dictionary#positions", "false")
+      // near-distinct per-block scalars: same overflow-then-fallback
+      // waste as the payloads (doc_count/max_tf/min_norm stay
+      // dictionaried — they live in small value ranges)
+      .option("parquet.enable.dictionary#first_doc", "false")
+      .option("parquet.enable.dictionary#last_doc", "false")
+      .option("parquet.enable.dictionary#sum_tf", "false")
+      .option("parquet.enable.dictionary#posting_bytes", "false")
+      .partitionBy("segment_id")
+      .parquet(s"$indexDir/postings")
+
+  /** Per-segment token totals over the per-field length columns
+    * `<lenPrefix><field>`, as [[assignDocIds]] `extraAggs`.
+    */
+  private[index] def tokenTotals(schema: IndexSchema, lenPrefix: String): Seq[Column] =
+    schema.fields.map(f => sum(col(s"$lenPrefix${f.name}")).as(s"tt_${f.name}"))
+
+  /** [[SegStat]]s from [[assignDocIds]]' per-segment rows of [[tokenTotals]]. */
+  private[index] def segStatsOf(schema: IndexSchema, segAggs: Map[Int, Row]): Seq[SegStat] =
+    segAggs.toSeq.sortBy(_._1).map { case (seg, r) =>
+      SegStat(seg, r.getLong(0),
+        schema.fields.zipWithIndex.map { case (f, i) => f.name -> r.getLong(1 + i) }.toMap)
+    }
+
+  /** Per-segment termstats/fieldstats of the just-written postings of
+    * `segStats`' segments, plus an append-only metrics lineage row per
+    * segment (builds and merges).
+    *
+    * @return the segment ids written (from the doc-count agg — no extra read
+    *         of the docs table)
+    */
+  private[index] def writeStats(
       spark: SparkSession,
       schema: IndexSchema,
       indexDir: String,
       buildId: String,
-      postingsRead: DataFrame,
       segStats: Seq[SegStat],
       mergeDepth: Int,
       parentSegments: Seq[Int]
   ): Seq[Int] = {
+    // re-read ONLY the narrow stat columns of the written blocks — column
+    // pruning makes this far cheaper than caching the full blocks
+    // (persisting them serialized every posting binary through the columnar
+    // cache, a memory-bandwidth tax the pack stage paid at every core count)
+    val segIds = segStats.map(_.segmentId)
+    val postingsRead = spark.read.parquet(s"$indexDir/postings")
+      .filter(col("segment_id").isin(segIds.map(Integer.valueOf): _*))
+      .select("segment_id", "field", "term", "doc_count", "sum_tf", "posting_bytes")
     // ONE pass over the packed blocks feeds both the termstats table and the
     // per-segment metrics aggregates: the metrics sums ride the termstats
     // WRITE job as per-segment observed aggregates (`Observation`), so this
@@ -1614,7 +1579,6 @@ object IndexBuilder {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val segIds = segStats.map(_.segmentId)
     val obs = org.apache.spark.sql.Observation(s"seg-metrics-$buildId")
     val obsAggs: Seq[org.apache.spark.sql.Column] = segIds.flatMap(s => Seq(
       sum(when(col("segment_id") === s, col("pb")).otherwise(lit(0L))).as(s"pb_$s"),

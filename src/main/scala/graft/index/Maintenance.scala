@@ -1,19 +1,11 @@
 package graft.index
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.search.IndexReader
-
-/** Decoded posting entry with optional positions (top-level: Janino codegen
-  * cannot construct deeply nested case classes — a `Maintenance$FullEntry`
-  * fell back to interpreted projections on every merge). Positions stay in
-  * their per-doc packed byte form ([[PostingCodec.slicePositions]]): docId
-  * rebasing never touches doc-internal positions, so the merge moves them
-  * as opaque bytes.
-  */
-final case class FullEntry(doc_id: Int, tf: Int, norm_id: Int, positions: Array[Byte])
 
 /** Index maintenance: segment merges, merge policies, vacuum, delete-by-set,
   * incremental upsert ingestion — the write-path operators W1–W9 of
@@ -23,22 +15,13 @@ final case class FullEntry(doc_id: Int, tf: Int, norm_id: Int, positions: Array[
   */
 object Maintenance {
 
-  private val unpackFull: UserDefinedFunction =
-    udf((docIds: Array[Byte], tfs: Array[Byte], norms: Array[Byte], pos: Array[Byte], n: Int) => {
-      val ids = PostingCodec.unpackDocIds(docIds, n)
-      val tf = PostingCodec.unpackVarInts(tfs, n)
-      val ps =
-        if (pos == null) null
-        else PostingCodec.slicePositions(pos, tf)
-      Array.tabulate(n)(i =>
-        FullEntry(ids(i), tf(i), norms(i) & 0xFF, if (ps == null) null else ps(i)))
-    })
-
   /** Merge the given segments into one new segment (W3: `merge_segments`,
-    * `index_writer_holder.rs:403-414`): docIds are rebased to the rank of
-    * the doc key within the merged set, tombstoned docs are dropped, and
-    * postings are re-blocked with the same single-shuffle streaming pack as
-    * fresh builds. Publishes a new snapshot (live − merged + new).
+    * `index_writer_holder.rs:403-414`): tombstoned docs are dropped and doc
+    * ids become the rank of the doc key within the merged set. Postings are
+    * never exploded to per-posting rows: each old packed block is remapped
+    * and cut at new-block boundaries map-side ([[IndexBuilder.packMerged]]),
+    * and the pieces go through the build's fragment merge, postings writer
+    * and stats writer. Publishes a new snapshot (live − merged + new).
     *
     * @return the new segment id
     */
@@ -61,14 +44,16 @@ object Maintenance {
       else spark.sessionState.conf.numShufflePartitions
     val segCond = col("segment_id").isin(segIds.map(Integer.valueOf): _*)
 
-    // 1. merged docs: drop tombstones, re-rank keys into the new segment
+    // 1. merged docs: drop tombstones, re-rank keys into the new segment;
+    //    the per-field token totals ride the assignment's pass 1
     val oldDocs = reader.applyDeletes(reader.docs.filter(segCond))
       .withColumnRenamed("segment_id", "old_seg")
       .withColumnRenamed("doc_id", "old_doc")
       .withColumnRenamed("key", "__key")
       .withColumn("segment_id", lit(newSeg))
     val sorted = IndexBuilder.shardAndSort(oldDocs, parts, oldDocs.columns.toSeq.map(col))
-    val (withIds0, handle, _, _) = IndexBuilder.assignDocIds(sorted, parts, conf.persist)
+    val (withIds0, handle, _, segAggs) = IndexBuilder.assignDocIds(sorted, parts, conf.persist,
+      IndexBuilder.tokenTotals(schema, "len_"))
     // The docs write below OVERWRITES $indexDir/docs — the very path the
     // cached assignment plan reads from. That insert triggers Spark's
     // path-based recache, so a second consumption of the assignment (the
@@ -94,40 +79,26 @@ object Maintenance {
       .partitionBy("segment_id")
       .parquet(s"$indexDir/docs")
 
-    // 2. postings: unpack → remap docIds (inner join drops tombstoned docs)
-    //    → re-block → streaming pack
-    val mapping = withIds.select(
-      col("old_seg"), col("old_doc"), col("doc_id").as("new_doc"))
-    val exploded = reader.postings
-      .filter(segCond)
-      .select(
-        col("field"), col("term"), col("segment_id").as("old_seg"),
-        explode(unpackFull(col("doc_ids"), col("tfs"), col("norms"), col("positions"),
-          col("doc_count"))).as("p"))
-      .select(
-        col("field"), col("term"), col("old_seg"),
-        col("p.doc_id").as("old_doc"), col("p.tf").as("tf"),
-        col("p.norm_id").as("norm_id"), col("p.positions").as("positions"))
-    val remapped = exploded
-      .join(mapping, Seq("old_seg", "old_doc"))
-      .select(
-        lit(newSeg).as("segment_id"), col("new_doc").as("doc_id"),
-        col("field"), col("term"), col("tf"), col("norm_id"), col("positions"))
+    // 2. postings: old packed blocks remapped through one `old_doc → new_doc`
+    //    int array per old segment (-1 = tombstoned), broadcast
+    val remap = spark.sparkContext.broadcast(docIdRemap(withIds))
+    IndexBuilder.writePostings(
+      IndexBuilder.packMerged(reader.postings.filter(segCond), newSeg, remap,
+        conf.blockBits, parts),
+      indexDir)
+    remap.destroy()
 
-    val recordPositions = schema.fields.map(f => f.name -> (f.record == "position")).toMap
-    IndexBuilder.packPostings(remapped, conf.blockBits, parts, recordPositions).write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("segment_id")
-      .parquet(s"$indexDir/postings")
-
-    // 3. per-segment stats + lineage for the new segment
+    // 3. per-segment stats + lineage for the new segment; a merge whose
+    //    input docs are all tombstoned still records an empty segment
     val parentDepth = reader.metrics
       .filter(segCond)
       .agg(max("merge_depth"))
       .collect()(0).getInt(0)
-    writeSegmentStats(spark, indexDir, schema, newSeg, buildId, parentDepth + 1,
-      segIds, parts)
+    val segStats = IndexBuilder.segStatsOf(schema, segAggs) match {
+      case Seq() => Seq(IndexBuilder.SegStat(newSeg, 0L, schema.fields.map(_.name -> 0L).toMap))
+      case st    => st
+    }
+    IndexBuilder.writeStats(spark, schema, indexDir, buildId, segStats, parentDepth + 1, segIds)
 
     // 4. atomic publish FIRST: the new snapshot retires the merged segments.
     //    Only then drop their tombstones — if the clear fails or a reader
@@ -149,76 +120,30 @@ object Maintenance {
     newSeg
   }
 
-  private def writeSegmentStats(
-      spark: SparkSession,
-      indexDir: String,
-      schema: IndexSchema,
-      segId: Int,
-      buildId: String,
-      mergeDepth: Int,
-      parents: Seq[Int],
-      parts: Int
-  ): Unit = {
-    import org.apache.spark.sql.types._
-    // one narrow column-pruned scan of the merged segment's blocks drives
-    // termstats AND the per-segment metrics aggregates (same single-pass
-    // shape as the fresh-build stats path)
-    val termLevel = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("segment_id") === segId)
-      .select("segment_id", "field", "term", "doc_count", "sum_tf", "posting_bytes")
-      .groupBy("segment_id", "field", "term")
-      .agg(
-        sum("doc_count").cast(LongType).as("df"),
-        sum("sum_tf").as("total_tf"),
-        sum("posting_bytes").as("pb"))
-      .persist()
-    termLevel
-      .select("segment_id", "field", "term", "df", "total_tf")
-      .repartition(math.max(parts / 4, 1), col("field"), col("term"))
-      .sortWithinPartitions("field", "term")
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("segment_id")
-      .parquet(s"$indexDir/termstats")
-
-    val docsRead = spark.read.parquet(s"$indexDir/docs").filter(col("segment_id") === segId)
-    val statAggs = schema.fields.map(f => sum(col(s"len_${f.name}")).as(s"tt_${f.name}"))
-    val statRow = docsRead.agg(count(lit(1)).as("n_docs"), statAggs: _*).collect()(0)
-    val fsRows = schema.fields.map(f =>
-      org.apache.spark.sql.Row(
-        f.name, statRow.getAs[Long]("n_docs"), statRow.getAs[Long](s"tt_${f.name}"), segId))
-    val fsSchema = StructType(Seq(
-      StructField("field", StringType, false),
-      StructField("n_docs", LongType, false),
-      StructField("total_tokens", LongType, true),
-      StructField("segment_id", IntegerType, false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(fsRows, 1), fsSchema)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("segment_id")
-      .parquet(s"$indexDir/fieldstats")
-
-    val segAgg = termLevel
-      .groupBy("segment_id")
-      .agg(sum("pb").as("posting_bytes"), count(lit(1)).as("num_terms"))
-      .collect().headOption
-    termLevel.unpersist()
-    val (pBytes, nTerms) = segAgg.map(r => (r.getLong(1), r.getLong(2))).getOrElse((0L, 0L))
-    val mRow = org.apache.spark.sql.Row(
-      buildId, segId, statRow.getAs[Long]("n_docs"), nTerms, pBytes, mergeDepth,
-      parents.map(_.toString).toArray, new java.sql.Timestamp(System.currentTimeMillis()))
-    val mSchema = StructType(Seq(
-      StructField("build_id", StringType, false),
-      StructField("segment_id", IntegerType, false),
-      StructField("num_docs", LongType, false),
-      StructField("num_terms", LongType, false),
-      StructField("posting_bytes", LongType, false),
-      StructField("merge_depth", IntegerType, false),
-      StructField("parent_segments", ArrayType(StringType, false), false),
-      StructField("created_at", TimestampType, false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(Seq(mRow), 1), mSchema)
-      .write.mode("append").parquet(s"$indexDir/metrics")
+  /** Collect a merge's (old_seg, old_doc, doc_id) assignment into one dense
+    * `old_doc → new_doc` array per old segment (4 bytes per old doc; -1 for
+    * docs without a new id). Executors ship primitive arrays per
+    * (partition, old segment), so the driver never holds a Row per doc.
+    */
+  private def docIdRemap(withIds: DataFrame): Map[Int, Array[Int]] = {
+    val pieces = withIds.select("old_seg", "old_doc", "doc_id").rdd.mapPartitions { rows =>
+      val bySeg = mutable.HashMap.empty[Int, (mutable.ArrayBuilder.ofInt, mutable.ArrayBuilder.ofInt)]
+      rows.foreach { r =>
+        val (olds, news) = bySeg.getOrElseUpdate(r.getInt(0),
+          (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofInt))
+        olds += r.getInt(1)
+        news += r.getInt(2)
+      }
+      bySeg.iterator.map { case (seg, (olds, news)) => (seg, olds.result(), news.result()) }
+    }.collect()
+    pieces.groupBy(_._1).map { case (seg, ps) =>
+      val remap = Array.fill(ps.map(_._2.max).max + 1)(-1)
+      ps.foreach { case (_, olds, news) =>
+        var i = 0
+        while (i < olds.length) { remap(olds(i)) = news(i); i += 1 }
+      }
+      seg -> remap
+    }
   }
 
   /** Append tombstones for a doc-set (W/S8: delete by query — callers pass

@@ -1,7 +1,5 @@
 package graft.index
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Binary codec for posting blocks.
   *
   * A block holds the postings of one `(field, term, segment, block_id)` key,
@@ -20,15 +18,6 @@ import scala.collection.mutable.ArrayBuffer
   *   - positions: per doc, `tf` delta-encoded varint positions, concatenated
   */
 object PostingCodec {
-
-  def writeVarInt(buf: ArrayBuffer[Byte], v0: Int): Unit = {
-    var v = v0
-    while ((v & ~0x7F) != 0) {
-      buf += ((v & 0x7F) | 0x80).toByte
-      v >>>= 7
-    }
-    buf += v.toByte
-  }
 
   /** Growable primitive byte writer for the pack hot paths —
     * `ArrayBuffer[Byte]` is unspecialized (it boxes every appended byte into
@@ -88,9 +77,6 @@ object PostingCodec {
     }
   }
 
-  /** One decoded posting. */
-  final case class Posting(docId: Int, tf: Int, normId: Int, positions: Array[Int])
-
   def packDocIds(sortedDocIds: Array[Int]): Array[Byte] = {
     val buf = new ByteVec(sortedDocIds.length * 2)
     var prev = 0
@@ -147,26 +133,26 @@ object PostingCodec {
     buf.toArray
   }
 
-  /** Split a block's `positions` bytes back into per-doc byte runs (no
-    * decode — varints are only walked to find the boundaries). The merge
-    * path uses this to carry positions through docId rebasing untouched.
+  /** Per-doc boundaries of a block's `positions` bytes: doc i's packed run
+    * is `[off(i), off(i + 1))` (varints are only walked to find the
+    * boundaries, not decoded). Merges use this to carry positions through
+    * docId remapping untouched.
     */
-  def slicePositions(bytes: Array[Byte], tfs: Array[Int]): Array[Array[Byte]] = {
-    val out = new Array[Array[Byte]](tfs.length)
+  def positionOffsets(bytes: Array[Byte], tfs: Array[Int]): Array[Int] = {
+    val off = new Array[Int](tfs.length + 1)
     var p = 0
     var d = 0
     while (d < tfs.length) {
-      val start = p
       var k = tfs(d)
       while (k > 0) {
         while ((bytes(p) & 0x80) != 0) p += 1
         p += 1
         k -= 1
       }
-      out(d) = java.util.Arrays.copyOfRange(bytes, start, p)
       d += 1
+      off(d) = p
     }
-    out
+    off
   }
 
   def unpackDocIds(bytes: Array[Byte], count: Int): Array[Int] = {

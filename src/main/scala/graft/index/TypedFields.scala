@@ -64,11 +64,9 @@ object TypedFields {
     } else None
   }
 
-  /** Single-term TokField for a typed value (len 1, like a raw field). */
-  def singleTok(term: Option[String]): IndexBuilder.TokField = term match {
-    case Some(t) =>
-      IndexBuilder.TokField(1, FieldNorm.encode(1L),
-        Array(IndexBuilder.TermGroup(t, 1, PostingCodec.packDocPositions(Array(0)))))
-    case None => IndexBuilder.TokField(0, 0, Array.empty)
+  /** Single-term TokFlat for a typed value (len 1, like a raw field). */
+  def singleTok(term: Option[String]): IndexBuilder.TokFlat = term match {
+    case Some(t) => IndexBuilder.singleTermFlat(t)
+    case None    => IndexBuilder.EmptyTokFlat
   }
 }

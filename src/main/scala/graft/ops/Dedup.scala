@@ -204,9 +204,11 @@ object Dedup {
       }
     )
 
-  /** Codepoint fold identical to [[portableStringHash]]'s column form: the
-    * column version folds `ascii(substr(s, i, 1))` over character positions
-    * (= the codepoint of each character), so the loop walks codepoints.
+  /** Code-point fold identical to [[portableStringHash]]'s column form over
+    * all strings, supplementary (non-BMP) characters included: Spark's
+    * `length` and `substr` count code points and `ascii` returns the first
+    * character's full code point, so the column form folds code points, not
+    * UTF-16 units — and so does this loop. OpsSpec's parity test pins it.
     */
   private[ops] def stringHash(s: String): Long = {
     var h = 0L

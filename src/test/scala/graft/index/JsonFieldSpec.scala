@@ -52,8 +52,8 @@ class JsonFieldSpec extends AnyFunSuite {
   test("analyzeJson flattens nested objects/arrays into typed path terms") {
     val tok = JsonField.analyzeJson(
       "summa", """{"id": 7, "tags": ["red fox", "fox"], "meta": {"year": 2020, "ok": true}}""")
-    val terms = tok.terms.map(g =>
-      g.term -> ((g.tf, PostingCodec.unpackPositions(g.positions, Array(g.tf)).head.toSeq))).toMap
+    val terms = (0 until tok.termCount).map(i => tok.term(i) ->
+      ((tok.tf(i), PostingCodec.unpackPositions(tok.posSlice(i), Array(tok.tf(i))).head.toSeq))).toMap
     assert(terms.contains(JsonField.i64Term("id", 7L)))
     assert(terms.contains(JsonField.i64Term("meta.year", 2020L)))
     assert(terms.contains(JsonField.boolTerm("meta.ok", true)))

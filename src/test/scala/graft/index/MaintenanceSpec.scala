@@ -269,6 +269,117 @@ class MaintenanceSpec extends AnyFunSuite {
     val qb = keyScores(new Searcher(new IndexReader(spark, dirB), schema), TermQuery("text", "spark"))
     assert(qa == qb)
   }
+
+  /** One position field, one non-position field (also stored). */
+  private val twoFieldSchema = IndexSchema(
+    keyField = "doc_id",
+    fields = Seq(FieldDef("text", "summa", "position"), FieldDef("tag", "summa", "freq")),
+    defaultFields = Seq("text"),
+    storedFields = Seq("tag"))
+
+  private def twoFieldCorpus(n: Int, seed: Int) = {
+    val tags = Vector("red", "green", "blue", "spark")
+    val rnd = new scala.util.Random(seed)
+    corpus(n, seed).map { case (id, t) =>
+      (id, t, Vector.fill(1 + rnd.nextInt(3))(tags(rnd.nextInt(tags.size))).mkString(" "))
+    }
+  }
+
+  /** A segment's rows of one index table, minus `segment_id`, as comparable
+    * values (binaries as byte sequences), columns in name order.
+    */
+  private def segmentRows(dir: String, table: String, seg: Int): Seq[Seq[Any]] = {
+    val df = spark.read.parquet(s"$dir/$table").filter(col("segment_id") === seg)
+    df.select(df.columns.filterNot(_ == "segment_id").sorted.toSeq.map(col): _*)
+      .collect().toSeq
+      .map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v              => v
+      })
+      .sortBy(_.mkString("\u0000"))
+  }
+
+  test("merge of interleaving segments with tombstones equals a fresh build of the live pages") {
+    // blockBits = 3: 8-doc blocks, so every new block interleaves docs of
+    // several old segments, and 5 build partitions split blocks across
+    // partition boundaries in both the old and the fresh build
+    val conf = IndexBuilder.BuildConf(numSegments = 5, blockBits = 3, buildPartitions = 5)
+    val pages = twoFieldCorpus(300, 21)
+    val dir = Files.createTempDirectory("graft-merge-eq").toString
+    IndexBuilder.build(spark, pages.toDF("doc_id", "text", "tag"), twoFieldSchema, dir, "b0", conf)
+    assert(Snapshots.latest(spark, dir).get.segments.size == 5)
+
+    val deleted = pages.map(_._1).filter(_ % 7 == 3).map(_.toString)
+    val r0 = new IndexReader(spark, dir)
+    assert(Maintenance.deleteDocs(spark, dir,
+      r0.docs.filter(col("key").isin(deleted: _*)).select("segment_id", "doc_id")) == deleted.size)
+    val merged = Maintenance.vacuum(spark, dir, twoFieldSchema, "v1", conf = conf).get
+    assert(Snapshots.latest(spark, dir).get.segments == Seq(merged))
+
+    val fresh = Files.createTempDirectory("graft-merge-eq-fresh").toString
+    val live = pages.filterNot(p => deleted.contains(p._1.toString))
+    IndexBuilder.build(spark, live.toDF("doc_id", "text", "tag"), twoFieldSchema, fresh, "f0",
+      conf.copy(numSegments = 1))
+
+    for (table <- Seq("postings", "termstats", "fieldstats", "docs")) {
+      val got = segmentRows(dir, table, merged)
+      val want = segmentRows(fresh, table, 0)
+      assert(got.nonEmpty, table)
+      assert(got == want, s"$table rows differ between the merge and a fresh build")
+    }
+  }
+
+  test("merge keeps every posting of duplicate-key docs") {
+    // docs sharing a key tie in the merge's (segment, key) sort; each must
+    // keep its own postings, positions and score
+    val dir = Files.createTempDirectory("graft-merge-dupkeys").toString
+    val pages = corpus(200, 13).map { case (id, t) => (id % 9, t) }
+    IndexBuilder.build(spark, pages.toDF("doc_id", "text"), schema, dir, "b0",
+      IndexBuilder.BuildConf(numSegments = 3, blockBits = 3, buildPartitions = 4))
+    def hits(s: Searcher, q: Query): Seq[(String, Double)] =
+      s.reader.docs.select(col("segment_id"), col("doc_id"), col("key"))
+        .join(s.search(q), Seq("segment_id", "doc_id"))
+        .collect().map(r => (r.getAs[String]("key"), r.getAs[Double]("score"))).toSeq.sorted
+    val term = TermQuery("text", "spark")
+    val phrase = PhraseQuery("text", Seq((0, "spark"), (1, "window")), 0)
+    val s0 = new Searcher(new IndexReader(spark, dir), schema)
+    val (termBefore, phraseBefore) = (hits(s0, term), hits(s0, phrase))
+    Maintenance.vacuum(spark, dir, schema, "v1",
+      conf = IndexBuilder.BuildConf(blockBits = 3, buildPartitions = 4))
+    val s1 = new Searcher(new IndexReader(spark, dir), schema)
+    assert(s1.count(AllQuery) == 200)
+    assert(hits(s1, term) == termBefore)
+    assert(hits(s1, phrase) == phraseBefore)
+  }
+
+  test("merge of all-tombstoned segments commits an empty segment with lineage") {
+    val dir = Files.createTempDirectory("graft-merge-empty").toString
+    val pages = corpus(60, 8)
+    IndexBuilder.build(spark, pages.toDF("doc_id", "text"), schema, dir, "b0",
+      IndexBuilder.BuildConf(numSegments = 2))
+    val live0 = Snapshots.latest(spark, dir).get.segments
+    val r0 = new IndexReader(spark, dir)
+    assert(Maintenance.deleteDocs(spark, dir, r0.docs.select("segment_id", "doc_id")) == 60)
+
+    val newSeg = Maintenance.mergeSegments(spark, dir, schema, live0, "m-empty")
+    assert(Snapshots.latest(spark, dir).get.segments == Seq(newSeg))
+
+    val fs = spark.read.parquet(s"$dir/fieldstats").filter(col("segment_id") === newSeg)
+      .select("field", "n_docs").collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(fs.toSeq == Seq(("text", 0L)))
+
+    val m = new IndexReader(spark, dir).metrics.filter(col("segment_id") === newSeg).collect()
+    assert(m.length == 1)
+    assert(m.head.getAs[Long]("num_docs") == 0L)
+    assert(m.head.getAs[Int]("merge_depth") == 1)
+    assert(m.head.getSeq[String](m.head.fieldIndex("parent_segments")).map(_.toInt).sorted ==
+      live0.sorted)
+
+    val s = new Searcher(new IndexReader(spark, dir), schema)
+    assert(s.count(TermQuery("text", "spark")) == 0)
+    assert(s.count(PhraseQuery("text", Seq((0, "spark"), (1, "window")), 0)) == 0)
+    assert(s.search(BooleanQuery(vocab.map(t => (Occur.Should, TermQuery("text", t))))).count() == 0)
+  }
 }
 
 /** Snapshot time travel + auto-compaction loop. */

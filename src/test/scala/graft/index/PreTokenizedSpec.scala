@@ -27,18 +27,18 @@ class PreTokenizedSpec extends AnyFunSuite {
       IndexBuilder.PreToken(5, "Hello"))) // gap positions preserved
     assert(tf.len == 3)
     assert(tf.norm == FieldNorm.encode(3L))
-    assert(tf.terms.map(_.term).toSeq == Seq("Hello", "world")) // term-sorted
-    val hello = tf.terms.find(_.term == "Hello").get
-    assert(hello.tf == 2)
-    assert(PostingCodec.unpackPositions(hello.positions, Array(2)).head.toSeq == Seq(0, 5))
+    assert(tf.termsDecoded.toSeq == Seq("Hello", "world")) // term-sorted
+    val hello = tf.termsDecoded.indexOf("Hello")
+    assert(tf.tf(hello) == 2)
+    assert(PostingCodec.unpackPositions(tf.posSlice(hello), Array(2)).head.toSeq == Seq(0, 5))
     // equivalence with the analyzed path when tokens match what the
     // analyzer would emit
-    val analyzed = IndexBuilder.analyzeField("summa", "hello world")
+    val analyzed = IndexBuilder.analyzeFieldFlatLegacy("summa", "hello world")
     val pre = IndexBuilder.analyzePreTokenized(Seq(
       IndexBuilder.PreToken(0, "hello"), IndexBuilder.PreToken(1, "world")))
     assert(pre.len == analyzed.len && pre.norm == analyzed.norm)
-    assert(pre.terms.map(t => (t.term, t.tf)).toSeq ==
-      analyzed.terms.map(t => (t.term, t.tf)).toSeq)
+    assert(pre.termsDecoded.toSeq.zip(Seq.tabulate(pre.termCount)(pre.tf)) ==
+      analyzed.termsDecoded.toSeq.zip(Seq.tabulate(analyzed.termCount)(analyzed.tf)))
   }
 
   test("build round-trip: struct<text, tokens> column bypasses the analyzer, positions survive") {

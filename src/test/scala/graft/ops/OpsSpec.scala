@@ -111,6 +111,11 @@ class OpsSpec extends AnyFunSuite {
         Dedup.minhashSignature($"sh", 16).as("col"))
       .collect()
     sigRows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
+    // the kernel's char fold equals portableStringHash over the whole
+    // string domain, supplementary (non-BMP) characters included
+    val strs = Seq("", "a", "alpha beta", "größe", "日本語", "𝔘", "x𝔘y 😀 z", "𝔘𝔘")
+    val hashes = strs.toDF("s").select($"s", Dedup.portableStringHash($"s")).collect()
+    hashes.foreach(r => assert(Dedup.stringHash(r.getString(0)) == r.getLong(1), r.getString(0)))
   }
 
   test("compiled stopwordRatio is bitwise-identical to the column form (r6)") {
