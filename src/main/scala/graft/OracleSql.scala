@@ -204,7 +204,8 @@ object OracleSql {
          |ORDER BY ph.doc_id""".stripMargin
 
   /** Two-term phrase with slop: base positions whose partner term appears
-    * within `slop` of the expected spot (mirrors PostingUdfs.phraseTf).
+    * within `slop` of the expected spot (mirrors
+    * PostingUdfs.phraseMatchPositions).
     */
   def phraseSlop(t1: String, t2: String, slop: Int): String =
     prologue +
@@ -226,10 +227,11 @@ object OracleSql {
          |JOIN qn q ON q.doc_id = ph.doc_id
          |ORDER BY ph.doc_id""".stripMargin
 
-  /** Three-term phrase with move-based slop — mirrors PostingUdfs.phraseTf
-    * (slop>0 path): a base (t1) occurrence matches iff some window
-    * [w, w+slop] of normalized positions (`pos - offset`) contains one
-    * occurrence of every term, i.e. the alignment spread max-min <= slop.
+  /** Three-term phrase with move-based slop — mirrors
+    * PostingUdfs.phraseMatchPositions (slop>0 path): a base (t1)
+    * occurrence matches iff some window [w, w+slop] of normalized positions
+    * (`pos - offset`) contains one occurrence of every term, i.e. the
+    * alignment spread max-min <= slop.
     */
   def phraseSlop3(t1: String, t2: String, t3: String, slop: Int): String =
     prologue +

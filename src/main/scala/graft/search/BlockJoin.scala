@@ -1,6 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -17,6 +19,11 @@ import graft.index.PostingCodec
   * conjunction of two mid-df terms shuffling 10⁸ per-occurrence rows at
   * 100× scale and shuffling 10⁵ block rows.
   *
+  * Conjunctions and phrases share the one join ([[joinBlocks]]) and the one
+  * in-block walk ([[walk]]); phrase scoring and phrase explain read the same
+  * [[phraseMatches]] rows, whose alignment is the one
+  * [[PostingUdfs.phraseMatchPositions]].
+  *
   * Result identity: a doc containing all terms occupies the same
   * `block_id = doc_id >>> blockBits` in every term's postings, so the block
   * join loses no matches; the per-term `(tf, norm_id)` ints surface exactly
@@ -32,139 +39,75 @@ object BlockJoin {
   /** One conjunction match: per-term tf / norm in clause order. */
   final case class MustMatch(doc_id: Int, tfs: Seq[Int], norms: Seq[Int])
 
-  /** One phrase match: alignment count (phrase tf) + first term's norm. */
-  final case class PhraseMatch(doc_id: Int, tf: Int, norm_id: Int)
+  /** One phrase match: first term's norm + the matched base-term alignment
+    * positions (their count is the phrase tf).
+    */
+  final case class PhraseMatch(doc_id: Int, norm_id: Int, mpos: Seq[Int])
+
+  /** Walk k sorted doc-id lists of one (segment, block) and call `emit(doc,
+    * cursor)` for every doc of list 0 present in all k lists, where
+    * `cursor(t)` is the doc's index in list t. Lists are sorted (pack order),
+    * so a single forward cursor per list suffices.
+    */
+  private def walk(ids: Array[Array[Int]])(emit: (Int, Array[Int]) => Unit): Unit = {
+    val k = ids.length
+    val cursor = new Array[Int](k)
+    val lead = ids(0)
+    var i0 = 0
+    while (i0 < lead.length) {
+      val d = lead(i0)
+      var all = true
+      var j = 1
+      while (all && j < k) {
+        val a = ids(j)
+        var c = cursor(j)
+        while (c < a.length && a(c) < d) c += 1
+        cursor(j) = c
+        all = c < a.length && a(c) == d
+        j += 1
+      }
+      if (all) {
+        cursor(0) = i0
+        emit(d, cursor)
+      }
+      i0 += 1
+    }
+  }
 
   /** Intersect k packed doc-id lists of one (segment, block); emit the
-    * per-term (tf, norm) ints of every doc present in all k lists. Lists are
-    * sorted (pack order), so a single forward cursor per list suffices.
+    * per-term (tf, norm) ints of every doc present in all k lists.
     */
   val intersectUdf: UserDefinedFunction =
     udf((ds: Seq[Array[Byte]], ts: Seq[Array[Byte]], ms: Seq[Array[Byte]], ns: Seq[Int]) => {
       val k = ns.length
       val ids = Array.tabulate(k)(i => PostingCodec.unpackDocIds(ds(i), ns(i)))
       val tfs = Array.tabulate(k)(i => PostingCodec.unpackVarInts(ts(i), ns(i)))
-      val cursor = new Array[Int](k)
       val out = Seq.newBuilder[MustMatch]
-      val lead = ids(0)
-      var i0 = 0
-      while (i0 < lead.length) {
-        val d = lead(i0)
-        var all = true
-        var j = 1
-        while (all && j < k) {
-          val a = ids(j)
-          var c = cursor(j)
-          while (c < a.length && a(c) < d) c += 1
-          cursor(j) = c
-          all = c < a.length && a(c) == d
-          j += 1
-        }
-        if (all) {
-          val tfOut = new Array[Int](k)
-          val nmOut = new Array[Int](k)
-          tfOut(0) = tfs(0)(i0)
-          nmOut(0) = ms(0)(i0) & 0xFF
-          var j2 = 1
-          while (j2 < k) {
-            val c = cursor(j2)
-            tfOut(j2) = tfs(j2)(c)
-            nmOut(j2) = ms(j2)(c) & 0xFF
-            j2 += 1
-          }
-          out += MustMatch(d, tfOut.toIndexedSeq, nmOut.toIndexedSeq)
-        }
-        i0 += 1
+      walk(ids) { (d, c) =>
+        out += MustMatch(d,
+          ArraySeq.unsafeWrapArray(Array.tabulate(k)(t => tfs(t)(c(t)))),
+          ArraySeq.unsafeWrapArray(Array.tabulate(k)(t => ms(t)(c(t)) & 0xFF)))
       }
       out.result()
     })
 
-  /** Intersect k positional posting blocks of one (segment, block) and run
-    * the phrase alignment ([[PostingUdfs.phraseTf]], the same function the
-    * exploded plan applied) over each doc present in all k lists. Emits
-    * (doc_id, phrase_tf, first-term norm — `m0` is the first term's norms
-    * blob) for docs with ≥1 alignment — exactly the rows the exploded plan's
-    * join + filter produced.
+  /** Intersect k positional posting blocks of one (segment, block) and align
+    * each doc present in all k lists with [[PostingUdfs.phraseMatchPositions]].
+    * Emits (doc_id, first-term norm — `m0` is the first term's norms blob,
+    * matched positions) for docs with ≥1 alignment.
     */
-  val phraseUdf7: UserDefinedFunction =
+  val phraseUdf: UserDefinedFunction =
     udf((ds: Seq[Array[Byte]], ts: Seq[Array[Byte]], ps: Seq[Array[Byte]], m0: Array[Byte],
          ns: Seq[Int], offsets: Seq[Int], slop: Int) => {
       val k = ns.length
       val ids = Array.tabulate(k)(i => PostingCodec.unpackDocIds(ds(i), ns(i)))
       val tfs = Array.tabulate(k)(i => PostingCodec.unpackVarInts(ts(i), ns(i)))
       val poss = Array.tabulate(k)(i => PostingCodec.unpackPositions(ps(i), tfs(i)))
-      val cursor = new Array[Int](k)
       val out = Seq.newBuilder[PhraseMatch]
-      val lead = ids(0)
-      var i0 = 0
-      while (i0 < lead.length) {
-        val d = lead(i0)
-        var all = true
-        var j = 1
-        while (all && j < k) {
-          val a = ids(j)
-          var c = cursor(j)
-          while (c < a.length && a(c) < d) c += 1
-          cursor(j) = c
-          all = c < a.length && a(c) == d
-          j += 1
-        }
-        if (all) {
-          val positionsPerTerm: Seq[Seq[Int]] = Seq.tabulate(k) { t =>
-            val idx = if (t == 0) i0 else cursor(t)
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(poss(t)(idx))
-          }
-          val ptf = PostingUdfs.phraseTf(positionsPerTerm, offsets, slop)
-          if (ptf > 0) out += PhraseMatch(d, ptf, m0(i0) & 0xFF)
-        }
-        i0 += 1
-      }
-      out.result()
-    })
-
-  /** One phrase-explain match: first-term norm + the matched base-term
-    * alignment positions ([[PostingUdfs.phraseMatchPositions]]).
-    */
-  final case class PhrasePosMatch(doc_id: Int, norm_id: Int, mpos: Seq[Int])
-
-  /** [[phraseUdf7]] variant for the per-hit explain path: emits the matched
-    * alignment positions instead of just their count — the same
-    * [[PostingUdfs.phraseMatchPositions]] the exploded detail plan applied.
-    */
-  val phrasePosUdf7: UserDefinedFunction =
-    udf((ds: Seq[Array[Byte]], ts: Seq[Array[Byte]], ps: Seq[Array[Byte]], m0: Array[Byte],
-         ns: Seq[Int], offsets: Seq[Int], slop: Int) => {
-      val k = ns.length
-      val ids = Array.tabulate(k)(i => PostingCodec.unpackDocIds(ds(i), ns(i)))
-      val tfs = Array.tabulate(k)(i => PostingCodec.unpackVarInts(ts(i), ns(i)))
-      val poss = Array.tabulate(k)(i => PostingCodec.unpackPositions(ps(i), tfs(i)))
-      val cursor = new Array[Int](k)
-      val out = Seq.newBuilder[PhrasePosMatch]
-      val lead = ids(0)
-      var i0 = 0
-      while (i0 < lead.length) {
-        val d = lead(i0)
-        var all = true
-        var j = 1
-        while (all && j < k) {
-          val a = ids(j)
-          var c = cursor(j)
-          while (c < a.length && a(c) < d) c += 1
-          cursor(j) = c
-          all = c < a.length && a(c) == d
-          j += 1
-        }
-        if (all) {
-          val positionsPerTerm: Seq[Seq[Int]] = Seq.tabulate(k) { t =>
-            val idx = if (t == 0) i0 else cursor(t)
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(poss(t)(idx))
-          }
-          val mpos = PostingUdfs.phraseMatchPositions(positionsPerTerm, offsets, slop)
-          if (mpos.nonEmpty)
-            out += PhrasePosMatch(d, m0(i0) & 0xFF,
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(mpos))
-        }
-        i0 += 1
+      walk(ids) { (d, c) =>
+        val mpos = PostingUdfs.phraseMatchPositions(
+          Seq.tabulate(k)(t => ArraySeq.unsafeWrapArray(poss(t)(c(t)))), offsets, slop)
+        if (mpos.nonEmpty) out += PhraseMatch(d, m0(c(0)) & 0xFF, ArraySeq.unsafeWrapArray(mpos))
       }
       out.result()
     })
@@ -182,72 +125,47 @@ object BlockJoin {
     filtered.select(cols: _*)
   }
 
+  /** The k terms' block rows inner-joined on `(segment_id, block_id)`. */
+  private def joinBlocks(reader: IndexReader, terms: Seq[(String, String)],
+                         withPositions: Boolean): DataFrame = {
+    require(terms.size >= 2)
+    terms.zipWithIndex
+      .map { case ((f, t), i) => termBlocks(reader, f, t, i, withPositions) }
+      .reduce((a, b) => a.join(b, Seq("segment_id", "block_id"), "inner"))
+  }
+
+  /** `array(__<prefix>0, …, __<prefix>{n-1})`. */
+  private def perTerm(prefix: String, n: Int): Column =
+    array((0 until n).map(i => col(s"__$prefix$i")): _*)
+
   /** Conjunction of ≥2 posting-backed terms via the block join. Returns
     * `(segment_id, doc_id, tfs, norms)` with per-term ints in clause order —
     * the caller scores them with the same column expressions as the exploded
     * plan, so the result is bitwise identical.
     */
   def mustTerms(reader: IndexReader, terms: Seq[(String, String)]): DataFrame = {
-    require(terms.size >= 2)
     val n = terms.size
-    val joined = terms.zipWithIndex
-      .map { case ((f, t), i) => termBlocks(reader, f, t, i, withPositions = false) }
-      .reduce((a, b) => a.join(b, Seq("segment_id", "block_id"), "inner"))
-    joined
+    joinBlocks(reader, terms, withPositions = false)
       .select(col("segment_id"), explode(intersectUdf(
-        array((0 until n).map(i => col(s"__d$i")): _*),
-        array((0 until n).map(i => col(s"__t$i")): _*),
-        array((0 until n).map(i => col(s"__m$i")): _*),
-        array((0 until n).map(i => col(s"__n$i")): _*))).as("m"))
+        perTerm("d", n), perTerm("t", n), perTerm("m", n), perTerm("n", n))).as("m"))
       .select(col("segment_id"), col("m.doc_id").as("doc_id"),
         col("m.tfs").as("tfs"), col("m.norms").as("norms"))
   }
 
-  /** Phrase candidates of ≥2 terms via the block join. Returns
-    * `(segment_id, doc_id, phrase_tf, norm_id)` for docs with ≥1 alignment,
-    * identical to the exploded positional join + [[PostingUdfs.phraseTfUdf]]
-    * filter (same alignment function, same first-term norm).
+  /** Phrase matches of ≥2 terms via the block join. Returns `(segment_id,
+    * doc_id, norm_id, mpos)` for docs with ≥1 alignment: `mpos` holds the
+    * matched base-term positions, `size(mpos)` is the phrase tf, and
+    * `norm_id` is the first term's norm. Phrase scoring and phrase explain
+    * both read these rows.
     */
   def phraseMatches(reader: IndexReader, field: String, terms: Seq[String],
                     offsets: Seq[Int], slop: Int): DataFrame = {
-    require(terms.size >= 2)
     val n = terms.size
-    val joined = terms.zipWithIndex
-      .map { case (t, i) => termBlocks(reader, field, t, i, withPositions = true) }
-      .reduce((a, b) => a.join(b, Seq("segment_id", "block_id"), "inner"))
-    joined
-      .select(col("segment_id"), explode(phraseUdf7(
-        array((0 until n).map(i => col(s"__d$i")): _*),
-        array((0 until n).map(i => col(s"__t$i")): _*),
-        array((0 until n).map(i => col(s"__p$i")): _*),
-        col("__m0"),
-        array((0 until n).map(i => col(s"__n$i")): _*),
+    joinBlocks(reader, terms.map(t => (field, t)), withPositions = true)
+      .select(col("segment_id"), explode(phraseUdf(
+        perTerm("d", n), perTerm("t", n), perTerm("p", n), col("__m0"), perTerm("n", n),
         typedLit(offsets), lit(slop))).as("m"))
       .select(col("segment_id"), col("m.doc_id").as("doc_id"),
-        col("m.tf").as("phrase_tf"), col("m.norm_id").as("norm_id"))
-  }
-
-  /** Phrase-explain candidates of ≥2 terms via the block join: returns
-    * `(segment_id, doc_id, norm_id, __mpos)` for docs with ≥1 alignment —
-    * identical to the exploded positional join + phraseMatchPositionsUdf
-    * filter (same alignment function, same first-term norm).
-    */
-  def phraseDetailMatches(reader: IndexReader, field: String, terms: Seq[String],
-                          offsets: Seq[Int], slop: Int): DataFrame = {
-    require(terms.size >= 2)
-    val n = terms.size
-    val joined = terms.zipWithIndex
-      .map { case (t, i) => termBlocks(reader, field, t, i, withPositions = true) }
-      .reduce((a, b) => a.join(b, Seq("segment_id", "block_id"), "inner"))
-    joined
-      .select(col("segment_id"), explode(phrasePosUdf7(
-        array((0 until n).map(i => col(s"__d$i")): _*),
-        array((0 until n).map(i => col(s"__t$i")): _*),
-        array((0 until n).map(i => col(s"__p$i")): _*),
-        col("__m0"),
-        array((0 until n).map(i => col(s"__n$i")): _*),
-        typedLit(offsets), lit(slop))).as("m"))
-      .select(col("segment_id"), col("m.doc_id").as("doc_id"),
-        col("m.norm_id").as("norm_id"), col("m.mpos").as("__mpos"))
+        col("m.norm_id").as("norm_id"), col("m.mpos").as("mpos"))
   }
 }

@@ -10,7 +10,6 @@ import graft.index.{IndexSchema, PostingCodec}
 /** Posting-block decoders exposed to Spark plans. */
 object PostingUdfs {
   final case class PEntry(doc_id: Int, tf: Int, norm_id: Int)
-  final case class PEntryPos(doc_id: Int, tf: Int, norm_id: Int, positions: Array[Int])
 
   val unpack: UserDefinedFunction =
     udf((docIds: Array[Byte], tfs: Array[Byte], norms: Array[Byte], n: Int) => {
@@ -28,61 +27,15 @@ object PostingUdfs {
   val unpackIds: UserDefinedFunction =
     udf((docIds: Array[Byte], n: Int) => PostingCodec.unpackDocIds(docIds, n))
 
-  val unpackPos: UserDefinedFunction =
-    udf((docIds: Array[Byte], tfs: Array[Byte], norms: Array[Byte], pos: Array[Byte], n: Int) => {
-      val ids = PostingCodec.unpackDocIds(docIds, n)
-      val tf = PostingCodec.unpackVarInts(tfs, n)
-      val ps = PostingCodec.unpackPositions(pos, tf)
-      Array.tabulate(n)(i => PEntryPos(ids(i), tf(i), norms(i) & 0xFF, ps(i)))
-    })
-
-  /** Count phrase matches. slop=0 is exact adjacency of normalized positions
-    * (`pos_i - offset_i` all equal). slop>0 uses move-based slop: a base
-    * (first-term) occurrence matches iff there EXISTS one occurrence per
-    * remaining term such that the spread of normalized positions —
-    * max(norm) - min(norm) over ALL terms including the base — is <= slop
-    * (Lucene `matchLength` semantics; for two terms this reduces to
-    * |norm_1 - norm_0| <= slop). tf = number of matching base occurrences,
-    * consistent with the slop=0 count of exact alignments.
-    */
-  def phraseTf(positionsPerTerm: Seq[Seq[Int]], offsets: Seq[Int], slop: Int): Int = {
-    val first = positionsPerTerm.head
-    val base0 = offsets.head
-    if (slop == 0) {
-      val rest = positionsPerTerm.tail.zip(offsets.tail)
-      first.count { p0 =>
-        val base = p0 - base0
-        rest.forall { case (ps, off) =>
-          java.util.Arrays.binarySearch(ps.toArray, base + off) >= 0
-        }
-      }
-    } else {
-      // normalized, sorted positions per non-base term
-      val normed: Seq[Array[Int]] = positionsPerTerm.tail.zip(offsets.tail).map {
-        case (ps, off) => ps.map(_ - off).toArray.sorted
-      }
-      def hasInWindow(ns: Array[Int], lo: Int, hi: Int): Boolean = {
-        val idx = java.util.Arrays.binarySearch(ns, lo)
-        val ins = if (idx >= 0) idx else -idx - 1
-        ins < ns.length && ns(ins) <= hi
-      }
-      first.count { p0 =>
-        val n0 = p0 - base0
-        // spread <= slop  ⟺  some length-slop window [w, w+slop] containing
-        // n0 covers one normalized position of every term
-        (n0 - slop to n0).exists(w => normed.forall(ns => hasInWindow(ns, w, w + slop)))
-      }
-    }
-  }
-
-  val phraseTfUdf: UserDefinedFunction =
-    udf((pos: Seq[Seq[Int]], offsets: Seq[Int], slop: Int) => phraseTf(pos, offsets, slop))
-
-  /** The matched base-term positions (pre-filter ordinals) — the phrase's
-    * alignment windows, for per-hit explain. Same match predicate as
-    * [[phraseTf]] (result length == phraseTf); kept separate so the per-doc
-    * scoring path stays allocation-free while this runs only over the k
-    * explained hits.
+  /** The phrase alignment: the matched base-term (first-term) positions
+    * (pre-filter ordinals); their count is the phrase tf. slop=0 is exact
+    * adjacency of normalized positions (`pos_i - offset_i` all equal).
+    * slop>0 uses move-based slop: a base occurrence matches iff there EXISTS
+    * one occurrence per remaining term such that the spread of normalized
+    * positions — max(norm) - min(norm) over ALL terms including the base —
+    * is <= slop (Lucene `matchLength` semantics; for two terms this reduces
+    * to |norm_1 - norm_0| <= slop). Phrase scoring and phrase explain both
+    * run this one function ([[BlockJoin.phraseMatches]]).
     */
   def phraseMatchPositions(
       positionsPerTerm: Seq[Seq[Int]], offsets: Seq[Int], slop: Int): Array[Int] = {
@@ -105,14 +58,12 @@ object PostingUdfs {
       }
       first.iterator.filter { p0 =>
         val n0 = p0 - base0
+        // spread <= slop  ⟺  some length-slop window [w, w+slop] containing
+        // n0 covers one normalized position of every term
         (n0 - slop to n0).exists(w => normed.forall(ns => hasInWindow(ns, w, w + slop)))
       }.toArray
     }
   }
-
-  val phraseMatchPositionsUdf: UserDefinedFunction =
-    udf((pos: Seq[Seq[Int]], offsets: Seq[Int], slop: Int) =>
-      phraseMatchPositions(pos, offsets, slop))
 }
 
 /** Plans a [[Query]] into a DataFrame of `(segment_id, doc_id, score)` and
@@ -271,25 +222,37 @@ class Searcher(
               .as("score")
           )
       case None =>
-        reader.postings
-          .filter(col("field") === field && col("term") === term)
-          .select(col("segment_id"), explode(unpack(col("doc_ids"), col("tfs"), col("norms"), col("doc_count"))).as("p"))
-          .select(
-            col("segment_id"),
-            col("p.doc_id").as("doc_id"),
-            (BM25.scoreCol(col("p.tf"), col("p.norm_id"), idf, avgdl(field), fieldnorms) * lit(boost)).as("score")
-          )
+        termPostings(field, term).select(
+          col("segment_id"),
+          col("doc_id"),
+          (BM25.scoreCol(col("tf"), col("norm_id"), idf, avgdl(field), fieldnorms) * lit(boost)).as("score")
+        )
     }
   }
+
+  /** One term's postings decoded to `(segment_id, doc_id, tf, norm_id)`. */
+  private def termPostings(field: String, term: String): DataFrame =
+    reader.postings
+      .filter(col("field") === field && col("term") === term)
+      .select(col("segment_id"), explode(unpack(col("doc_ids"), col("tfs"), col("norms"), col("doc_count"))).as("p"))
+      .select(col("segment_id"), col("p.doc_id").as("doc_id"), col("p.tf").as("tf"), col("p.norm_id").as("norm_id"))
+
+  /** Unscored doc set of every term matching `termPred`: ids-only decode. */
+  private def termSetHits(termPred: Column): DataFrame =
+    reader.postings
+      .filter(termPred)
+      .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
+      .distinct()
+      .withColumn("score", lit(1.0))
 
   /** Phrase candidates via the block-aligned join (r6): positional posting
     * BLOCK rows join on `(segment_id, block_id)` — one row per (term, block)
     * instead of one per (doc, term) — and the doc intersection + alignment
-    * ([[PostingUdfs.phraseTf]], the same function the exploded plan applied)
-    * runs inside the matched block. Result-identical: a doc holding all
-    * terms sits in the same block in each term's postings, the norm comes
-    * from the first term's row exactly as before, and the score column is
-    * the same [[BM25.scoreCol]] over the same ints.
+    * ([[PostingUdfs.phraseMatchPositions]]) runs inside the matched block;
+    * the phrase tf is the number of matched positions. Result-identical: a
+    * doc holding all terms sits in the same block in each term's postings,
+    * the norm comes from the first term's row exactly as before, and the
+    * score column is the same [[BM25.scoreCol]] over the same ints.
     */
   private def phraseHits(pq: PhraseQuery, dfs: Map[(String, String), Long]): DataFrame = {
     val PhraseQuery(field, terms, slop) = pq
@@ -304,7 +267,7 @@ class Searcher(
       .select(
         col("segment_id"),
         col("doc_id"),
-        BM25.scoreCol(col("phrase_tf"), col("norm_id"), sumIdf, avgdl(field), fieldnorms).as("score")
+        BM25.scoreCol(size(col("mpos")), col("norm_id"), sumIdf, avgdl(field), fieldnorms).as("score")
       )
   }
 
@@ -418,22 +381,13 @@ class Searcher(
       val conds = Seq(Some(col("field") === f),
         lo.map(v => if (il) t >= v else t > v),
         hi.map(v => if (iu) t <= v else t < v)).flatten
-      reader.postings
-        .filter(conds.reduce(_ && _))
-        .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
-        .distinct()
-        .withColumn("score", lit(1.0))
+      termSetHits(conds.reduce(_ && _))
     case ExistsQuery(f) =>
       val docsSchema = reader.docs.schema.fieldNames.toSet
       if (docsSchema.contains(s"len_$f")) constHits(col(s"len_$f") > 0)
       else if (docsSchema.contains(f)) constHits(col(f).isNotNull)
       else emptyHits
-    case RegexQuery(f, pat) =>
-      reader.postings
-        .filter(col("field") === f && col("term").rlike(pat))
-        .select(col("segment_id"), explode(unpackIds(col("doc_ids"), col("doc_count"))).as("doc_id"))
-        .distinct()
-        .withColumn("score", lit(1.0))
+    case RegexQuery(f, pat) => termSetHits(col("field") === f && col("term").rlike(pat))
     case mq: MatchQuery         => plan(resolve(mq), dfs)
     case mlt: MoreLikeThisQuery => plan(resolve(mlt), dfs)
   }
@@ -629,16 +583,13 @@ class Searcher(
     val df = dfs.getOrElse((field, term), 0L)
     if (df == 0L) return None
     val idf = BM25.idf(df, totalDocs(field))
-    Some(reader.postings
-      .filter(col("field") === field && col("term") === term)
-      .select(col("segment_id"),
-        explode(unpack(col("doc_ids"), col("tfs"), col("norms"), col("doc_count"))).as("p"))
+    Some(termPostings(field, term)
       .select(
-        col("segment_id"), col("p.doc_id").as("doc_id"),
+        col("segment_id"), col("doc_id"),
         lit(field).as("field"), lit(term).as("term"), lit(kind).as("kind"),
-        col("p.tf").as("tf"), col("p.norm_id").as("norm_id"),
+        col("tf"), col("norm_id"),
         lit(idf).as("idf"), lit(boost).as("boost"),
-        (BM25.scoreCol(col("p.tf"), col("p.norm_id"), idf, avgdl(field), fieldnorms) *
+        (BM25.scoreCol(col("tf"), col("norm_id"), idf, avgdl(field), fieldnorms) *
           lit(boost)).as("contribution"),
         lit(null).cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.IntegerType)).as("positions")))
@@ -663,18 +614,17 @@ class Searcher(
     val offsets = terms.map(_._1)
     val phraseText =
       terms.map(_._2).mkString("\"", " ", "\"") + (if (slop > 0) s"~$slop" else "")
-    // block-aligned candidate join (r6) — scoreLeaves guarantees ≥2 terms
-    // here (a single-term phrase explains as a TermLeaf); __mpos comes from
-    // the same phraseMatchPositions function the exploded plan applied
-    Some(BlockJoin.phraseDetailMatches(reader, field, terms.map(_._2), offsets, slop)
+    // the same block-join rows phraseHits scores — scoreLeaves guarantees
+    // ≥2 terms here (a single-term phrase explains as a TermLeaf)
+    Some(BlockJoin.phraseMatches(reader, field, terms.map(_._2), offsets, slop)
       .select(
         col("segment_id"), col("doc_id"),
         lit(field).as("field"), lit(phraseText).as("term"), lit("phrase").as("kind"),
-        size(col("__mpos")).as("tf"), col("norm_id").as("norm_id"),
+        size(col("mpos")).as("tf"), col("norm_id"),
         lit(sumIdf).as("idf"), lit(boost).as("boost"),
-        (BM25.scoreCol(size(col("__mpos")), col("norm_id"), sumIdf, avgdl(field), fieldnorms) *
+        (BM25.scoreCol(size(col("mpos")), col("norm_id"), sumIdf, avgdl(field), fieldnorms) *
           lit(boost)).as("contribution"),
-        col("__mpos").as("positions")))
+        col("mpos").as("positions")))
   }
 
   /** Top-k with a per-hit `explain` JSON column (reference: the

@@ -62,10 +62,6 @@ object WandTopK {
     var mx = 0.0
   }
 
-  /** Backwards-compatible entry: a should-only bag of terms. */
-  def topK(searcher: Searcher, field: String, terms: Seq[String], k: Int): DataFrame =
-    topK(searcher, TermBag(field, Nil, terms, Nil, None), k)
-
   def topK(searcher: Searcher, bag: TermBag, k: Int): DataFrame = {
     val reader = searcher.reader
     val spark = reader.spark

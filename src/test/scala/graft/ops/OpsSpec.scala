@@ -1,6 +1,10 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GreaterThanOrEqual, LessThan, Literal}
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -152,6 +156,36 @@ class OpsSpec extends AnyFunSuite {
       assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
     }
+  }
+
+  test("cosinePairs plan: the nested-loop join condition is only id < id, the threshold filters above it") {
+    // Similarity.dotPair is nondeterministic so Catalyst cannot push the
+    // cosine threshold into the join condition, where it would run per
+    // ordered candidate pair before `id < id` prunes. The table has the
+    // embeddings fixture's shape (500 × 64 floats); the plan does not
+    // depend on the values.
+    val rnd = new scala.util.Random(29)
+    val emb = Seq.tabulate(500)(i => (i.toLong, Seq.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val pairs = Dedup.cosinePairs(emb, "vec_id", "embedding", 0.45)
+    pairs.collect()
+    val plan = pairs.queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val joins = aqe.collect(plan) { case j: BroadcastNestedLoopJoinExec => j }
+    assert(joins.size == 1, plan.toString)
+    joins.head.condition match {
+      case Some(LessThan(a: AttributeReference, b: AttributeReference)) =>
+        assert(a.name == "id" && b.name == "id", joins.head.condition)
+      case c => fail(s"join condition is not only id < id: $c")
+    }
+    def isThreshold(e: Expression): Boolean = e.exists {
+      case GreaterThanOrEqual(_, Literal(v, _)) => v == 0.45
+      case _                                    => false
+    }
+    val thresholdFilters = aqe.collect(plan) { case f: FilterExec if isThreshold(f.condition) => f }
+    assert(thresholdFilters.size == 1, plan.toString)
+    assert(aqe.find(thresholdFilters.head.child)(_ eq joins.head).isDefined,
+      s"the threshold filter is not above the join:\n$plan")
   }
 
   test("brute-force cosine top-k is exact and ordered") {

@@ -47,7 +47,7 @@ class WandSpec extends AnyFunSuite {
 
   test("single term: WAND == exhaustive (bitwise scores)") {
     for (t <- Seq("w0", "w5", "w20")) {
-      val wand = WandTopK.topK(searcher, "text", Seq(t), 10)
+      val wand = WandTopK.topK(searcher, WandTopK.TermBag("text", Nil, Seq(t), Nil), 10)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       val base = exhaustive(TermQuery("text", t), 10)
       assert(wand.map(x => (x._1, x._2)).toSeq == base.map(x => (x._1, x._2)).toSeq)
@@ -58,17 +58,17 @@ class WandSpec extends AnyFunSuite {
   test("multi-term should bag: WAND == exhaustive") {
     val terms = Seq("w0", "w1", "w7", "w15")
     val q = BooleanQuery(terms.map(t => (Occur.Should, TermQuery("text", t): Query)))
-    val wand = WandTopK.topK(searcher, "text", terms, 15)
+    val wand = WandTopK.topK(searcher, WandTopK.TermBag("text", Nil, terms, Nil), 15)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     assertSame(wand, exhaustive(q, 15))
   }
 
   test("k larger than matches; missing terms") {
-    val wand = WandTopK.topK(searcher, "text", Seq("w49", "nosuchterm"), 1000)
+    val wand = WandTopK.topK(searcher, WandTopK.TermBag("text", Nil, Seq("w49", "nosuchterm"), Nil), 1000)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     val base = exhaustive(TermQuery("text", "w49"), 1000)
     assertSame(wand, base)
-    assert(WandTopK.topK(searcher, "text", Seq("nosuchterm"), 10).count() == 0)
+    assert(WandTopK.topK(searcher, WandTopK.TermBag("text", Nil, Seq("nosuchterm"), Nil), 10).count() == 0)
   }
 
   test("topDocs auto-routes eligible queries through WAND") {
